@@ -1,0 +1,1 @@
+"""Cold-cache end-to-end benchmark of the engine; see README.md."""
