@@ -218,6 +218,49 @@ def _pretouch(sf_dir: str) -> None:
                         pass
 
 
+def json_lines(
+    timings: dict[str, float], sf: str, subset: bool
+) -> tuple[str, str]:
+    """The headline_full line and the official CORE line. A subset run
+    (SPARK_GRAFT_BENCH_ONLY) tags both with ``"subset": true`` and
+    ``"n_queries"`` so its total is never read as the official figure;
+    without the knob neither key is added."""
+    tag = {"subset": True, "n_queries": len(timings)} if subset else {}
+    # Full detail first (the sf1 gate and humans parse this line) ...
+    full = json.dumps(
+        {
+            "metric": "headline_full",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": float(sf),
+            **tag,
+        },
+        separators=(",", ":"),
+    )
+    # ... then the official line LAST, restricted to CORE,
+    # compact-separated, and at 2-decimal precision (the cross-round
+    # noise band is ±0.05 s, so the third decimal carries no signal —
+    # but it costs one char per query against the 2000-char stdout
+    # tail the official line is parsed from; headline_full keeps 3
+    # decimals).
+    core_timings = {
+        name: round(timings[name], 2) for name in CORE if name in timings
+    }
+    line = json.dumps(
+        {
+            "metric": "headline_core_total",
+            "value": round(sum(core_timings.values()), 3),
+            "unit": "sec",
+            "queries": core_timings,
+            "sf": float(sf),
+            **tag,
+        },
+        separators=(",", ":"),
+    )
+    return full, line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -253,37 +296,8 @@ def main() -> None:
             best = min(best, time.perf_counter() - t0)
         timings[name] = round(best, 3)
 
-    # Full detail first (the sf1 gate and humans parse this line) ...
-    print(
-        json.dumps(
-            {
-                "metric": "headline_full",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(sf),
-            },
-            separators=(",", ":"),
-        )
-    )
-    # ... then the official line LAST, restricted to CORE,
-    # compact-separated, and at 2-decimal precision (the cross-round
-    # noise band is ±0.05 s, so the third decimal carries no signal —
-    # but it costs one char per query against the driver's 2000-char
-    # stdout tail window; headline_full above keeps 3 decimals).
-    core_timings = {
-        name: round(timings[name], 2) for name in CORE if name in timings
-    }
-    line = json.dumps(
-        {
-            "metric": "headline_core_total",
-            "value": round(sum(core_timings.values()), 3),
-            "unit": "sec",
-            "queries": core_timings,
-            "sf": float(sf),
-        },
-        separators=(",", ":"),
-    )
+    full, line = json_lines(timings, sf, subset=bool(only))
+    print(full)
     assert len(line) < 1950, (
         f"official bench line is {len(line)} chars; the driver parses "
         "the final line out of a 2000-char stdout tail — move a query "

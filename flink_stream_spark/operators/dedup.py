@@ -678,12 +678,14 @@ def dedup_jaccard_prefix_filter(
     )
     # The nomination join carries the 60-bit md5-prefix hash instead
     # of the raw 3-gram string (round-10): equal shingles always hash
-    # equal, so no qualifying pair is ever lost, and a (vanishingly
-    # unlikely) collision only NOMINATES an extra pair that the exact
-    # verify below rejects — the result is provably identical under
-    # ANY hash behavior, while the four nomination-join exchanges
-    # shuffle 8-byte longs instead of ~25-byte strings (guide §2.3
-    # narrower types). Ranking (df, shingle) stays on the raw string.
+    # equal, so no qualifying pair is ever lost, and the four
+    # nomination-join exchanges shuffle 8-byte longs instead of
+    # ~25-byte strings (narrower types). Ranking
+    # (df, shingle) stays on the raw string. The result equals the
+    # string join under the md5 collision-freedom assumption that the
+    # verify below relies on (its arrays carry the same hash): two
+    # distinct shingles of one pair must never share a 60-bit
+    # md5-prefix, or the verify counts them as one shared shingle.
     from flink_stream_spark.operators.text import _tok_hash_spark
 
     prefix = (

@@ -19,10 +19,11 @@ stand in for an encoded image) — byte lengths, checksums and derived
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
@@ -1557,60 +1558,90 @@ def multimodal_flac_roundtrip_stats(
     return sorted_result(wav_envelope_stats(media), "doc_id")
 
 
-def audio_band_vals(env_col: str = "env"):
-    """The AUDIO_BANDS packed band-signature values of a stored raw
-    envelope column — a pure column expression, so an index holding
-    raw envelopes re-blocks algebraically (the image-stream lesson:
-    store the signal, derive the blocking). Quantizes per extracted
-    element, NOT via an F.transform HOF: a transform embedded in each
-    of the 16 band terms is re-evaluated whole per term (16x the
-    work) and HOF lambdas don't codegen; element_at + divide + cast
-    stays in codegen and is numerically identical (values
-    nonnegative, truncation == floor)."""
+class BandedL1(NamedTuple):
+    """One raw-signal modality of the banded-L1 near-dup kernel. A
+    signature is ``n_bands`` x ``per_band`` nonnegative integers stored
+    raw in ``sig_col``; audio envelopes and video block means differ
+    only in these constants."""
 
-    def qat(i: int):
-        return (F.element_at(F.col(env_col), i) / F.lit(AUDIO_QSTEP)).cast(
-            "bigint"
+    sig_col: str
+    n_bands: int
+    per_band: int
+    qstep: int  # quantization step of the band values
+    l1_max: int  # exact L1 verify threshold over the whole signature
+    band_cap: int  # batch hot-band guard, mirrored by the oracles
+
+    def band_vals(self) -> Column:
+        """The packed band-signature values (base-33) of the stored raw
+        signature — a pure column expression, so an index holding raw
+        signatures re-blocks algebraically (the image-stream lesson:
+        store the signal, derive the blocking). Quantizes per extracted
+        element, NOT via an F.transform HOF: a transform embedded in
+        each band term is re-evaluated whole per term and HOF lambdas
+        don't codegen; element_at + divide + cast stays in codegen and
+        is numerically identical (values nonnegative, truncation ==
+        floor)."""
+
+        def qat(i: int):
+            q = F.element_at(F.col(self.sig_col), i) / F.lit(self.qstep)
+            return q.cast("bigint")
+
+        k = self.per_band
+        return F.array(
+            *[
+                sum(qat(k * b + t + 1) * F.lit(33**t) for t in range(k))
+                for b in range(self.n_bands)
+            ]
         )
 
-    return F.array(
-        *[
-            sum(qat(4 * b + t + 1) * F.lit(33**t) for t in range(4))
-            for b in range(AUDIO_BANDS)
-        ]
-    )
+    def l1(self, a: Column, b: Column) -> Column:
+        """Exact L1 over two signatures as codegen'd abs-diff terms
+        (JVM-side, no HOF)."""
+        l1 = None
+        for i in range(self.n_bands * self.per_band):
+            term = F.abs(a[i] - b[i])
+            l1 = term if l1 is None else l1 + term
+        return l1.cast("bigint")
+
+    def band_rows(self, sigs: DataFrame) -> DataFrame:
+        """(doc_id, band_idx, band_val) of each stored signature. All-
+        zero bands nominate NOTHING (band_val > 0): the zero-signature
+        decode fallback (undecodable payloads), pure silence and
+        zero-padding tail frames would otherwise all share band_val=0
+        with pairwise L1=0, silently flagging every undecodable clip
+        after the first as a duplicate."""
+        return sigs.select(
+            "doc_id", F.posexplode(self.band_vals()).alias("band_idx", "band_val")
+        ).filter(F.col("band_val") > 0)
+
+    def near(self, a: Column, b: Column) -> Column:
+        """The exact verify predicate: L1 <= l1_max."""
+        return self.l1(a, b) <= self.l1_max
 
 
-def envelope_l1(ea, eb):
-    """Exact L1 over two ENV_WINDOWS envelopes as codegen'd abs-diff
-    terms (JVM-side, no HOF)."""
-    l1 = None
-    for i in range(ENV_WINDOWS):
-        term = F.abs(ea[i] - eb[i])
-        l1 = term if l1 is None else l1 + term
-    return l1.cast("bigint")
+AUDIO_ENVELOPE = BandedL1(
+    "env", AUDIO_BANDS, ENV_WINDOWS // AUDIO_BANDS, AUDIO_QSTEP,
+    AUDIO_L1_MAX, AUDIO_BAND_CAP,
+)
 
 
-def envelope_near_dup_pairs(stats: DataFrame, cap_hot: bool = True) -> DataFrame:
-    """(doc_id, env) -> verified near-dup pairs (doc_a < doc_b,
-    l1_dist): banded nomination + exact L1 <= AUDIO_L1_MAX verify —
-    the shared kernel of the batch query and the streaming twin.
-    ``cap_hot`` applies the batch-global hot-band cap (the streaming
-    probe side must NOT cap — see streaming/audio_dedup_stream.py).
-
-    All-zero bands nominate NOTHING (band_val > 0 filter, the same
-    policy as the video query): the zero-envelope decode fallback
-    (non-WAV payloads, n_frames=0) and pure-silence windows would
-    otherwise all share band_val=0 with pairwise L1=0, silently
-    flagging every undecodable clip after the first as a duplicate."""
-    bv = stats.select(
-        "doc_id", F.posexplode(audio_band_vals()).alias("band_idx", "band_val")
-    ).filter(F.col("band_val") > 0)
+def banded_l1_near_dup_pairs(
+    stats: DataFrame, mod: BandedL1, cap_hot: bool = True
+) -> DataFrame:
+    """(doc_id, <mod.sig_col>) -> verified near-dup pairs (doc_a < doc_b,
+    l1_dist): banded nomination + exact L1 <= ``mod.l1_max`` verify.
+    The kernel of ``multimodal_audio_dedup_envelope`` (AUDIO_ENVELOPE)
+    and ``multimodal_video_dedup_motion`` (VIDEO_MOTION); the streaming
+    audio/video twins share its ``BandedL1`` band rows and verify
+    predicate, not this function. ``cap_hot`` applies the batch-global
+    hot-band cap (the streaming probe side must NOT cap — see
+    streaming/audio_dedup_stream.py)."""
+    bv = mod.band_rows(stats)
     if cap_hot:
         hot_ok = (
             bv.groupBy("band_idx", "band_val")
             .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= AUDIO_BAND_CAP)
+            .filter(F.col("__n") <= mod.band_cap)
             .select("band_idx", "band_val")
         )
         bv = bv.join(hot_ok, ["band_idx", "band_val"])
@@ -1636,19 +1667,13 @@ def envelope_near_dup_pairs(stats: DataFrame, cap_hot: bool = True) -> DataFrame
         )
         .dropDuplicates()
     )
-    ea = stats.select(F.col("doc_id").alias("doc_a"), F.col("env").alias("ea"))
-    eb = stats.select(F.col("doc_id").alias("doc_b"), F.col("env").alias("eb"))
+    sig = stats.select("doc_id", mod.sig_col)
     return (
-        cand.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            envelope_l1(F.col("ea"), F.col("eb")).alias("l1_dist"),
-        )
-        .filter(F.col("l1_dist") <= AUDIO_L1_MAX)
+        cand.join(sig.toDF("doc_a", "sa"), "doc_a")
+        .join(sig.toDF("doc_b", "sb"), "doc_b")
+        .select("doc_a", "doc_b", mod.l1(F.col("sa"), F.col("sb")).alias("l1_dist"))
+        .filter(F.col("l1_dist") <= mod.l1_max)
     )
-
 
 
 @register(
@@ -1701,7 +1726,7 @@ def envelope_near_dup_pairs(stats: DataFrame, cap_hot: bool = True) -> DataFrame
 def multimodal_audio_dedup_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     stats = wav_envelope_stats(_wav_media(d)).select("doc_id", "env").persist()
-    return envelope_near_dup_pairs(stats).orderBy("doc_a", "doc_b")
+    return banded_l1_near_dup_pairs(stats, AUDIO_ENVELOPE).orderBy("doc_a", "doc_b")
 
 
 # --- video: Y4M codec round-trip + motion-signature near-dup --------------
@@ -1724,6 +1749,10 @@ VID_QSTEP = 8  # block-mean quantization for banding (32 levels)
 VID_BAND_CAP = 128  # hot-band guard, mirrored by the oracle
 VID_L1_MAX = 48  # exact L1 verify threshold over the 32 block means
 _VID_CS = ["mono", "420", "444"]
+# per-frame spatial bands: one band of VID_BLOCKS strips per frame
+VIDEO_MOTION = BandedL1(
+    "block_means", VID_FRAMES, VID_BLOCKS, VID_QSTEP, VID_L1_MAX, VID_BAND_CAP
+)
 
 VIDEO_STATS_SCHEMA = (
     "doc_id bigint, n_frames bigint, frame_means array<bigint>, "
@@ -2050,7 +2079,7 @@ def multimodal_video_dedup_motion(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("doc_id", "block_means")
         .persist()
     )
-    return video_near_dup_pairs(stats).orderBy("doc_a", "doc_b")
+    return banded_l1_near_dup_pairs(stats, VIDEO_MOTION).orderBy("doc_a", "doc_b")
 
 
 # --- video scene-cut detection --------------------------------------------
@@ -2195,87 +2224,6 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("delta") >= VID_CUT_THRESH)
         .repartition("doc_id", "frame_idx")  # sorted_result (see sortout.py)
         .orderBy("doc_id", "frame_idx")
-    )
-
-
-def video_band_vals(bm_col: str = "block_means"):
-    """Per-frame packed spatial-band signature values of a stored raw
-    block-means column — a pure column expression over the signal, so
-    an index holding raw block means re-blocks algebraically (the
-    image/audio-stream lesson). Per-element quantization, no
-    F.transform HOF (codegen + no whole-array re-evaluation per term
-    — the audio twin's note)."""
-
-    def qat(i: int):
-        return (F.element_at(F.col(bm_col), i) / F.lit(VID_QSTEP)).cast(
-            "bigint"
-        )
-
-    return F.array(
-        *[
-            sum(qat(VID_BLOCKS * f + t + 1) * F.lit(33**t) for t in range(VID_BLOCKS))
-            for f in range(VID_FRAMES)
-        ]
-    )
-
-
-def blockmeans_l1(a, b):
-    """Exact L1 over two VID_FRAMES x VID_BLOCKS signatures as
-    codegen'd abs-diff terms (JVM-side, no HOF)."""
-    l1 = None
-    for i in range(VID_FRAMES * VID_BLOCKS):
-        term = F.abs(a[i] - b[i])
-        l1 = term if l1 is None else l1 + term
-    return l1.cast("bigint")
-
-
-def video_near_dup_pairs(stats: DataFrame, cap_hot: bool = True) -> DataFrame:
-    """(doc_id, block_means) -> verified near-dup pairs (doc_a < doc_b,
-    l1_dist): per-frame banded nomination (all-zero bands nominate
-    nothing — zero-padding tail frames and the undecodable-payload
-    fallback row) + exact L1 <= VID_L1_MAX verify — the shared kernel
-    of the batch query and the streaming twin. ``cap_hot`` applies the
-    batch-global hot-band cap (the streaming probe side must NOT cap —
-    see streaming/video_dedup_stream.py)."""
-    bv = stats.select(
-        "doc_id", F.posexplode(video_band_vals()).alias("band_idx", "band_val")
-    ).filter(F.col("band_val") > 0)
-    if cap_hot:
-        hot_ok = (
-            bv.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= VID_BAND_CAP)
-            .select("band_idx", "band_val")
-        )
-        bv = bv.join(hot_ok, ["band_idx", "band_val"])
-    cand = (
-        bv.alias("a")
-        .join(
-            bv.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        # width-pinned dedup — same rationale as envelope_near_dup_pairs
-        .repartition(
-            stats.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
-        )
-        .dropDuplicates()
-    )
-    sa = stats.select(F.col("doc_id").alias("doc_a"), F.col("block_means").alias("ba"))
-    sb = stats.select(F.col("doc_id").alias("doc_b"), F.col("block_means").alias("bb"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            blockmeans_l1(F.col("ba"), F.col("bb")).alias("l1_dist"),
-        )
-        .filter(F.col("l1_dist") <= VID_L1_MAX)
     )
 
 

@@ -599,10 +599,13 @@ BACKOFF_INV = 2.5  # 1/0.4: ln(2.5 * T / c) keeps the quantized nll >= 0
     "nll quantizes to micro-unit BIGINTs (every branch >= 0, "
     "floor(x*1e6+0.5) sign-safe); per-doc totals are exact integer "
     "sums. Scale: one token pass builds (doc_id, pos, term, prev) "
-    "via a doc-partitioned lag window; the three LM tables are "
-    "|vocab| / |bigram vocab| / |vocab| rows (AQE broadcasts them "
-    "when they fit, shuffle-hash otherwise — never the token "
-    "stream); scoring is three hash joins + one per-doc aggregate. "
+    "from the token array zipped with itself shifted by one; one "
+    "aggregate over it yields a single (prev, term) pair table "
+    "(|bigram vocab| rows — corpus-wide, so never force-broadcast) "
+    "whose unigram/context/total counts are window sums; scoring is "
+    "one join of the token stream against that table, strategy "
+    "chosen by AQE (broadcast when it fits the threshold, a shuffle "
+    "join otherwise), + one per-doc aggregate. "
     "At 100 TB the LM tables are built once per reference-corpus "
     "epoch and reused across every incoming batch.",
 )
@@ -621,13 +624,13 @@ def text_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # above the shared exchange and ran once per consuming branch
     # (counts + scoring), which is also why 8 cores beat 32 on it
     # (PERF_r09 scaling 0.34). Now neither branch sorts anything, the
-    # only stream-sized shuffle is the map-side-combined final per-doc
-    # aggregate, and the LM count tables build from an explode with no
-    # window. Row-identical: prev[i] = ts[i-1] with a null first token
+    # only stream-sized shuffles are the map-side-combined final
+    # per-doc aggregate and, when AQE cannot broadcast the pair table,
+    # the scoring join, and the LM count tables build from an explode
+    # with no window. Row-identical: prev[i] = ts[i-1] with a null first token
     # is exactly lag(term) over (doc_id ORDER BY pos). The doc_id
     # repartition stays: it is the shared materialization point that
-    # the scoring branch, the counts branch and the broadcast LM
-    # subtrees all reuse (single-row-group parquet fixtures scan as
+    # the scoring branch and the counts branch both reuse (single-row-group parquet fixtures scan as
     # ONE task — without the exchange each consumer re-runs the scan
     # and explode serially).
     par = spark.sparkContext.defaultParallelism
@@ -663,11 +666,11 @@ def text_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plus twice more for the scoring branch. Now one aggregate
     # counts every distinct (prev, term, is_lm) triple; the LM count
     # tables AND the complete (prev, term) pair list derive from that
-    # tiny table; per-pair nll quantizes to nm once; and the stream
-    # is touched exactly twice (the pair count + the scoring join,
-    # one broadcast hash join on the pair key). Counts are exact
-    # integers and the nll/floor expressions are unchanged, so every
-    # value is bit-identical to the multi-join form.
+    # pair table; per-pair nll quantizes to nm once; and the stream
+    # is touched exactly twice (the pair count + the scoring join on
+    # the pair key). Counts are exact integers and the nll/floor
+    # expressions are unchanged, so every value is bit-identical to
+    # the multi-join form.
     src_is_lm = F.substring("source", 4, 10).cast("int") < IDX_SOURCE_MAX
     pc = seq.groupBy("prev", "term", src_is_lm.alias("is_lm")).agg(
         F.count(F.lit(1)).alias("c")
@@ -721,8 +724,10 @@ def text_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("nm"),
     )
+    # no broadcast hint: the pair table grows with the corpus's bigram
+    # vocabulary, so AQE picks the join strategy from its real size
     scored = seq.join(
-        F.broadcast(pair_nm),
+        pair_nm,
         (F.col("term") == F.col("p_term"))
         & F.col("prev").eqNullSafe(F.col("p_prev")),
     ).select("doc_id", "nm")

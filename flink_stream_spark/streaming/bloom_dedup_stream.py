@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.operators.dedup import bloom_prefilter, bloom_words
+from flink_stream_spark.streaming.near_dup import replay_parquet, run_per_batch
 from flink_stream_spark.tables.managed import ManagedTable
 
 DEFAULT_M_BITS = 1 << 20
@@ -131,24 +132,11 @@ def start_incremental_bloom_dedup(
     m_bits: int = DEFAULT_M_BITS,
 ):
     """File-replayed document stream → per-batch bloom-prefiltered
-    exact dedup. One file per trigger keeps batch boundaries
-    deterministic for the parity test; a Kafka source swaps in behind
-    the same foreachBatch."""
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(b: DataFrame, epoch_id: int) -> None:
-        if b.isEmpty():
-            return
-        process_batch(
-            b, hash_table, bloom_table, flags_table, m_bits, epoch_id=epoch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    exact dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "doc_id bigint, text string", source_dir),
+        lambda b, e: process_batch(
+            b, hash_table, bloom_table, flags_table, m_bits, epoch_id=e
+        ),
+        checkpoint_dir,
     )

@@ -54,6 +54,7 @@ from flink_stream_spark.operators.html_extract import (
     extract_main_text,
 )
 from flink_stream_spark.operators.warc import _CDX_SCHEMA, read_members
+from flink_stream_spark.streaming.near_dup import run_per_batch
 from flink_stream_spark.tables.managed import ManagedTable
 
 _DOC_SCHEMA = (
@@ -163,17 +164,10 @@ def start_crawl_ingest(
         .option("maxFilesPerTrigger", 1)
         .csv(f"{warc_dir}/*.cdx.csv")
     )
-
-    def _apply(b: DataFrame, epoch_id: int) -> None:
-        if b.isEmpty():
-            return
-        process_batch(
-            b, warc_dir, docs_table, hash_table, flags_table,
-            epoch_id=epoch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return run_per_batch(
+        stream,
+        lambda b, e: process_batch(
+            b, warc_dir, docs_table, hash_table, flags_table, epoch_id=e
+        ),
+        checkpoint_dir,
     )

@@ -29,109 +29,23 @@ from flink_stream_spark.operators.dedup import (
     minhash_wide,
     shingled_docs,
 )
+from flink_stream_spark.streaming.near_dup import (
+    admit_batch,
+    band_candidates,
+    replay_parquet,
+    run_per_batch,
+    verified_pairs,
+)
 from flink_stream_spark.tables.managed import ManagedTable
 
 JACCARD_THRESHOLD = 0.5
 
 
-def banded_signatures(docs: DataFrame, shingled: DataFrame | None = None) -> DataFrame:
-    """(doc_id, band, sig) — shared banding layout (dedup.banded_frame),
-    so the streaming index can never drift from the batch pipeline."""
-    return banded_frame(minhash_wide(docs, shingled=shingled))
-
-
-def _verified_dup_pairs(
-    new_shingles: DataFrame, index_shingles: DataFrame, cand: DataFrame
-) -> DataFrame:
-    """Exact-Jaccard verify of candidate (new_doc, old_doc) pairs."""
-    sa = new_shingles.select(
-        F.col("doc_id").alias("new_doc"), F.col("shingles").alias("sh_new")
-    )
-    sb = index_shingles.select(
-        F.col("doc_id").alias("old_doc"), F.col("shingles").alias("sh_old")
-    )
-    shared = F.size(F.array_intersect(F.col("sh_new"), F.col("sh_old")))
-    jac = shared.cast("double") / (
-        F.size(F.col("sh_new")) + F.size(F.col("sh_old")) - shared
-    )
-    return (
-        cand.join(sa, "new_doc")
-        .join(sb, "old_doc")
-        .filter(jac >= JACCARD_THRESHOLD)
-        .select("new_doc", "old_doc")
-    )
-
-
-def _resolve_greedy_keep_first(
-    batch_ids: DataFrame, edges: DataFrame, index_flagged: DataFrame
-) -> DataFrame:
-    """Greedy keep-first over the within-batch verified pair graph,
-    resolved entirely DataFrame-side (no pair ever reaches the driver).
-
-    ``edges`` (new_doc, old_doc) point strictly to smaller doc_ids, so
-    the graph is a DAG. Fixed-point status propagation:
-
-    - a doc is DUP as soon as ANY earlier neighbor is known-KEPT;
-    - a doc is KEPT once ALL its earlier neighbors are determined and
-      none is KEPT (or it has no earlier neighbors / is not flagged
-      against the index).
-
-    Each round determines at least the smallest undetermined doc, so
-    the loop always terminates; a batch of N mutual near-dups (a
-    clique — the adversarial case that blew up the old driver-side
-    greedy quadratically) resolves in 2 rounds. Only a scalar count
-    crosses to the driver per round — same convergence-check pattern
-    as dedup_cluster_assign. ``dup_of`` (the smallest kept earlier
-    neighbor, the reference greedy's cands[0]) is computed after the
-    fixpoint so it never reads a half-determined status.
-
-    Returns (new_doc, dup_of) for batch docs flagged duplicate-of-a-
-    kept-BATCH-doc (index flags excluded — caller unions them).
-    """
-    idx_dup_ids = index_flagged.select(F.col("new_doc").alias("doc_id"))
-    has_edge = edges.select(F.col("new_doc").alias("doc_id")).distinct()
-    det = (
-        batch_ids.join(idx_dup_ids, "doc_id", "left_semi")
-        .withColumn("kept", F.lit(False))
-        .unionByName(
-            batch_ids.join(idx_dup_ids, "doc_id", "left_anti")
-            .join(has_edge, "doc_id", "left_anti")
-            .withColumn("kept", F.lit(True))
-        )
-        .localCheckpoint(eager=True)
-    )
-    undet = batch_ids.join(det, "doc_id", "left_anti").localCheckpoint(eager=True)
-    while undet.count() > 0:
-        u_edges = edges.join(
-            undet.withColumnRenamed("doc_id", "new_doc"), "new_doc", "left_semi"
-        )
-        per_doc = (
-            u_edges.join(
-                det.withColumnRenamed("doc_id", "old_doc"), "old_doc", "left"
-            )
-            .groupBy("new_doc")
-            .agg(
-                F.max(F.col("kept").isNull().cast("int")).alias("any_undet"),
-                F.max(F.when(F.col("kept"), 1).otherwise(0)).alias("any_kept"),
-            )
-        )
-        newly = (
-            per_doc.filter((F.col("any_kept") == 1) | (F.col("any_undet") == 0))
-            .select(
-                F.col("new_doc").alias("doc_id"),
-                (F.col("any_kept") == 0).alias("kept"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        det = det.unionByName(newly).localCheckpoint(eager=True)
-        undet = undet.join(newly, "doc_id", "left_anti").localCheckpoint(eager=True)
-    kept_side = det.filter("kept").select(F.col("doc_id").alias("old_doc"))
-    return (
-        edges.join(kept_side, "old_doc", "left_semi")
-        .groupBy("new_doc")
-        .agg(F.min("old_doc").alias("dup_of"))
-        .join(index_flagged.select("new_doc"), "new_doc", "left_anti")
-    )
+def _jaccard_at_least(sh_new, sh_old):
+    """Exact-Jaccard verify predicate over two shingle sets."""
+    shared = F.size(F.array_intersect(sh_new, sh_old))
+    jac = shared.cast("double") / (F.size(sh_new) + F.size(sh_old) - shared)
+    return jac >= JACCARD_THRESHOLD
 
 
 def process_batch(
@@ -145,95 +59,34 @@ def process_batch(
 
     Within the batch, stream order is doc_id order (the replay
     contract); a batch doc can be a duplicate of an earlier KEPT batch
-    doc, resolved greedily in doc_id order.
-
-    Replay safety: foreachBatch is at-least-once, so each of the three
-    index commits carries an ``epoch:<id>`` idempotency token — a
-    replayed micro-batch finds its token in the committed manifests and
-    no-ops (the keyed-upsert idempotency contract the reference gets
-    from Flink checkpoints + Iceberg commit metadata). The probe join
-    excludes self-pairs so a replay against a partially-committed epoch
-    (index already holding this batch's kept docs) still computes the
-    identical flag set.
+    doc, resolved greedily in doc_id order. Admission, replay safety
+    and compaction: ``streaming/near_dup.py``.
     """
     spark = batch.sparkSession
-    token = None if epoch_id is None else f"epoch:{epoch_id}"
     sh_new = shingled_docs(batch).localCheckpoint(eager=True)
     # reuse the checkpointed shingles: tokenization+shingling is the
-    # CPU-heaviest stage and would otherwise run twice per batch
-    bands_new = banded_signatures(batch, shingled=sh_new).localCheckpoint(eager=True)
-
-    if bands_table.exists():
-        idx_bands = bands_table.read(spark)
-        idx_shingles = shingles_table.read(spark)
-        cand_idx = (
-            bands_new.alias("n")
-            .join(
-                idx_bands.alias("i"),
-                (F.col("n.band") == F.col("i.band"))
-                & (F.col("n.sig") == F.col("i.sig"))
-                & (F.col("n.doc_id") != F.col("i.doc_id")),
-            )
-            .select(
-                F.col("n.doc_id").alias("new_doc"),
-                F.col("i.doc_id").alias("old_doc"),
-            )
-            .distinct()
-        )
-        dup_vs_index = _verified_dup_pairs(sh_new, idx_shingles, cand_idx)
-        flagged = dup_vs_index.groupBy("new_doc").agg(
-            F.min("old_doc").alias("dup_of")
-        )
-    else:
-        flagged = spark.createDataFrame([], "new_doc bigint, dup_of bigint")
-    flagged = flagged.localCheckpoint(eager=True)
-
-    # within-batch greedy (doc_id order), resolved DataFrame-side
-    cand_local = (
-        bands_new.alias("a")
-        .join(
-            bands_new.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("b.doc_id").alias("new_doc"), F.col("a.doc_id").alias("old_doc")
-        )
-        .distinct()
-    )
-    dup_local = _verified_dup_pairs(sh_new, sh_new, cand_local).localCheckpoint(
+    # CPU-heaviest stage and would otherwise run twice per batch. The
+    # shared banding layout (dedup.banded_frame) keeps the streaming
+    # index from drifting from the batch pipeline.
+    bands_new = banded_frame(minhash_wide(batch, shingled=sh_new)).localCheckpoint(
         eager=True
     )
-    local_flagged = _resolve_greedy_keep_first(
-        batch.select("doc_id"), dup_local, flagged
-    )
-    flagged = flagged.unionByName(local_flagged)
 
-    flags = (
-        batch.select("doc_id")
-        .join(flagged, batch.doc_id == flagged.new_doc, "left")
-        .select(
-            "doc_id",
-            F.col("dup_of"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
+    def probe() -> DataFrame:
+        cand = band_candidates(bands_new, bands_table.read(spark), within_batch=False)
+        return verified_pairs(
+            cand, sh_new, shingles_table.read(spark), "shingles", _jaccard_at_least
         )
-        .localCheckpoint(eager=True)
+
+    cand_local = band_candidates(bands_new, bands_new, within_batch=True)
+    admit_batch(
+        batch.select("doc_id"),
+        [(bands_table, bands_new), (shingles_table, sh_new)],
+        probe,
+        verified_pairs(cand_local, sh_new, sh_new, "shingles", _jaccard_at_least),
+        flags_table,
+        epoch_id,
     )
-    flags_table.append(flags, token=token)
-
-    kept = flags.filter(~F.col("is_dup")).select("doc_id")
-    bands_table.append(bands_new.join(kept, "doc_id"), token=token)
-    shingles_table.append(sh_new.join(kept, "doc_id"), token=token)
-
-    # small-files maintenance: each epoch appends one file per touched
-    # bucket, so without this an always-on stream degrades index reads
-    # O(epochs). Threshold-triggered; a no-op costs one manifest read.
-    # Runs AFTER the token-carrying commits so a crash before/after
-    # compaction never affects replay idempotency (compact rewrites
-    # files, never the commit-log tokens).
-    for t in (flags_table, bands_table, shingles_table):
-        t.maybe_compact(batch.sparkSession)
 
 
 def start_incremental_dedup(
@@ -244,25 +97,11 @@ def start_incremental_dedup(
     flags_table: ManagedTable,
     checkpoint_dir: str,
 ):
-    """File-replayed document stream → per-batch incremental dedup.
-    One file per trigger keeps batch boundaries deterministic for the
-    parity test; a Kafka source swaps in behind the same foreachBatch.
-    """
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        process_batch(
-            batch, bands_table, shingles_table, flags_table, epoch_id=epoch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    """File-replayed document stream → per-batch incremental dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "doc_id bigint, text string", source_dir),
+        lambda b, e: process_batch(
+            b, bands_table, shingles_table, flags_table, epoch_id=e
+        ),
+        checkpoint_dir,
     )

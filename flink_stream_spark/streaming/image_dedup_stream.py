@@ -22,14 +22,8 @@ cap is deliberately NOT applied on the probe side: the cap is a
 batch-global recall/cost trade, and an incremental probe joining
 new-batch rows (small) against a capped index would silently drop
 true dups as buckets heat up over epochs; the probe join cost is
-|batch|×bucket, bounded by the batch size. Within-batch duplicate
-resolution reuses the generic DataFrame-side greedy fixpoint
-(``_resolve_greedy_keep_first``) — no pair ever reaches the driver.
-
-Replay safety: every index commit carries an ``epoch:<id>``
-idempotency token (at-least-once foreachBatch re-deliveries no-op),
-and the probe excludes self-pairs so a replay against a
-partially-committed epoch computes the identical flag set.
+|batch|×bucket, bounded by the batch size. Admission (keep-first
+greedy, epoch tokens, replay safety): ``streaming/near_dup.py``.
 """
 
 from __future__ import annotations
@@ -44,7 +38,13 @@ from flink_stream_spark.operators.multimodal import (
     dhash_hamming,
     dhash_num_bands,
 )
-from flink_stream_spark.streaming.dedup_stream import _resolve_greedy_keep_first
+from flink_stream_spark.streaming.near_dup import (
+    admit_batch,
+    band_candidates,
+    replay_parquet,
+    run_per_batch,
+    verified_pairs,
+)
 from flink_stream_spark.tables.managed import ManagedTable
 
 
@@ -54,23 +54,10 @@ def _explode_bands(hashes: DataFrame, nb: int) -> DataFrame:
     )
 
 
-def _verified_dup_pairs(
-    new_hashes: DataFrame, index_hashes: DataFrame, cand: DataFrame
-) -> DataFrame:
-    """Exact-Hamming verify of candidate (new_doc, old_doc) pairs —
-    the same 8 codegen'd bit_count(xor) terms as the batch query."""
-    ha = new_hashes.select(
-        F.col("doc_id").alias("new_doc"), F.col("bands").alias("h_new")
-    )
-    hb = index_hashes.select(
-        F.col("doc_id").alias("old_doc"), F.col("bands").alias("h_old")
-    )
-    return (
-        cand.join(ha, "new_doc")
-        .join(hb, "old_doc")
-        .filter(dhash_hamming(F.col("h_new"), F.col("h_old")) <= DHASH_HAMMING_MAX)
-        .select("new_doc", "old_doc")
-    )
+def _hamming_near(h_new, h_old):
+    """Exact-Hamming verify — the same 8 codegen'd bit_count(xor) terms
+    as the batch query."""
+    return dhash_hamming(h_new, h_old) <= DHASH_HAMMING_MAX
 
 
 def process_image_batch(
@@ -84,81 +71,28 @@ def process_image_batch(
     replay contract); a batch image can be a duplicate of an earlier
     KEPT batch image, resolved greedily DataFrame-side."""
     spark = batch.sparkSession
-    token = None if epoch_id is None else f"epoch:{epoch_id}"
     hashes_new = dhash_bands(batch).localCheckpoint(eager=True)
-
-    if index_table.exists():
-        idx = index_table.read(spark)
-        # adaptive tier from ONE scalar count over index + batch; the
-        # raw stored hash re-blocks at any tier without rewriting
-        nb = dhash_num_bands(idx.count() + hashes_new.count())
-        e_new = _explode_bands(hashes_new, nb)
-        e_idx = _explode_bands(idx, nb)
-        cand_idx = (
-            e_new.alias("n")
-            .join(
-                e_idx.alias("i"),
-                (F.col("n.band_idx") == F.col("i.band_idx"))
-                & (F.col("n.band_val") == F.col("i.band_val"))
-                & (F.col("n.doc_id") != F.col("i.doc_id")),
-            )
-            .select(
-                F.col("n.doc_id").alias("new_doc"),
-                F.col("i.doc_id").alias("old_doc"),
-            )
-            .distinct()
-        )
-        dup_vs_index = _verified_dup_pairs(hashes_new, idx, cand_idx)
-        flagged = dup_vs_index.groupBy("new_doc").agg(
-            F.min("old_doc").alias("dup_of")
-        )
-    else:
-        nb = dhash_num_bands(hashes_new.count())
-        e_new = _explode_bands(hashes_new, nb)
-        flagged = spark.createDataFrame([], "new_doc bigint, dup_of bigint")
-    flagged = flagged.localCheckpoint(eager=True)
-
-    # within-batch: same banding, smaller-id side is the "old" doc
-    cand_local = (
-        e_new.alias("a")
-        .join(
-            e_new.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("b.doc_id").alias("new_doc"), F.col("a.doc_id").alias("old_doc")
-        )
-        .distinct()
+    # adaptive tier from ONE scalar count over index + batch; the raw
+    # stored hash re-blocks at any tier without rewriting
+    idx = index_table.read(spark) if index_table.exists() else None
+    nb = dhash_num_bands(
+        (0 if idx is None else idx.count()) + hashes_new.count()
     )
-    dup_local = _verified_dup_pairs(hashes_new, hashes_new, cand_local).localCheckpoint(
-        eager=True
-    )
-    local_flagged = _resolve_greedy_keep_first(
-        batch.select("doc_id"), dup_local, flagged
-    )
-    flagged = flagged.unionByName(local_flagged)
+    e_new = _explode_bands(hashes_new, nb)
 
-    flags = (
-        batch.select("doc_id")
-        .join(flagged, batch.doc_id == flagged.new_doc, "left")
-        .select(
-            "doc_id",
-            F.col("dup_of"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-        .localCheckpoint(eager=True)
+    def probe() -> DataFrame:
+        cand = band_candidates(e_new, _explode_bands(idx, nb), within_batch=False)
+        return verified_pairs(cand, hashes_new, idx, "bands", _hamming_near)
+
+    cand_local = band_candidates(e_new, e_new, within_batch=True)
+    admit_batch(
+        batch.select("doc_id"),
+        [(index_table, hashes_new)],
+        probe,
+        verified_pairs(cand_local, hashes_new, hashes_new, "bands", _hamming_near),
+        flags_table,
+        epoch_id,
     )
-    flags_table.append(flags, token=token)
-
-    kept = flags.filter(~F.col("is_dup")).select("doc_id")
-    index_table.append(hashes_new.join(kept, "doc_id"), token=token)
-
-    # small-files maintenance (threshold-triggered, post-commit — same
-    # rationale as the text twin)
-    for t in (flags_table, index_table):
-        t.maybe_compact(spark)
 
 
 def start_incremental_image_dedup(
@@ -168,23 +102,9 @@ def start_incremental_image_dedup(
     flags_table: ManagedTable,
     checkpoint_dir: str,
 ):
-    """File-replayed media stream → per-batch incremental image dedup.
-    One file per trigger keeps batch boundaries deterministic for the
-    parity test; a Kafka/object-store source swaps in behind the same
-    foreachBatch."""
-    stream = (
-        spark.readStream.schema("doc_id bigint, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        process_image_batch(batch, index_table, flags_table, epoch_id=epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    """File-replayed media stream → per-batch incremental image dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "doc_id bigint, payload binary", source_dir),
+        lambda b, e: process_image_batch(b, index_table, flags_table, epoch_id=e),
+        checkpoint_dir,
     )

@@ -12,7 +12,7 @@ n − ceil(τ·n) + 1 under a global token order, length filter
 are verified by the exact integer test 5·shared ≥ 3·union over the
 full sorted shingle arrays. Keep-FIRST semantics in stream order;
 within-batch pairs resolve through the shared greedy fixpoint
-(``_resolve_greedy_keep_first`` — no pair reaches the driver).
+(``streaming/near_dup.py`` — no pair is ever collected).
 
 THE ORDERING TRADE, stated honestly: the batch join ranks prefixes
 by global (document-frequency, shingle) ascending — a PERFORMANCE
@@ -34,8 +34,9 @@ same positional+length filters and by probe cost |batch prefix| ×
 bucket, never index².
 
 Replay safety: every commit carries an ``epoch:<id>`` idempotency
-token; the probe side reads only tables committed by PRIOR epochs,
-so an at-least-once redelivery recomputes the identical flag set.
+token (``streaming/near_dup.py``); the probe side reads only tables
+committed by PRIOR epochs, so an at-least-once redelivery recomputes
+the identical flag set.
 """
 
 from __future__ import annotations
@@ -48,7 +49,12 @@ from flink_stream_spark.operators.dedup import (
     JPF_TAU_NUM,
     shingled_docs,
 )
-from flink_stream_spark.streaming.dedup_stream import _resolve_greedy_keep_first
+from flink_stream_spark.streaming.near_dup import (
+    admit_batch,
+    replay_parquet,
+    run_per_batch,
+    verified_pairs,
+)
 from flink_stream_spark.tables.managed import ManagedTable
 
 
@@ -90,29 +96,21 @@ def prefix_rows(arrs: DataFrame) -> DataFrame:
     )
 
 
-def _candidates(pa: DataFrame, pb: DataFrame, strict_lt: bool) -> DataFrame:
+def _candidates(pa: DataFrame, pb: DataFrame, within_batch: bool) -> DataFrame:
     """Prefix-share candidates (new_doc, old_doc) with the length and
     PPJoin positional filters riding the join condition — identical
-    discipline to the batch join."""
-    a = pa.select(
-        F.col("doc_id").alias("new_doc"),
-        F.col("shingle").alias("sh_a"),
-        F.col("rk").alias("ra"),
-        F.col("n").alias("na"),
-    )
-    b = pb.select(
-        F.col("doc_id").alias("old_doc"),
-        F.col("shingle").alias("sh_b"),
-        F.col("rk").alias("rb"),
-        F.col("n").alias("nb"),
-    )
+    discipline to the batch join. Identity filter as in
+    ``near_dup.band_candidates``."""
+    cols = ("doc_id", "shingle", "rk", "n")
+    a = pa.select(*cols).toDF("new_doc", "sh_a", "ra", "na")
+    b = pb.select(*cols).toDF("old_doc", "sh_b", "rb", "nb")
     alpha = F.expr(
         f"({JPF_TAU_NUM} * (na + nb) + {JPF_TAU_NUM + JPF_TAU_DEN - 1}) "
         f"div {JPF_TAU_NUM + JPF_TAU_DEN}"
     )
     ident = (
         (F.col("new_doc") > F.col("old_doc"))
-        if strict_lt
+        if within_batch
         else (F.col("new_doc") != F.col("old_doc"))
     )
     return (
@@ -135,29 +133,12 @@ def _candidates(pa: DataFrame, pb: DataFrame, strict_lt: bool) -> DataFrame:
     )
 
 
-def _verified_pairs(
-    new_arrs: DataFrame, old_arrs: DataFrame, cand: DataFrame
-) -> DataFrame:
+def _jaccard_accepts(arr_a, arr_b):
     """Exact integer-threshold verify over full sorted arrays —
     5·shared ≥ 3·union, bit-identical to the batch accept test."""
-    aa = new_arrs.select(
-        F.col("doc_id").alias("new_doc"),
-        F.col("arr").alias("arr_a"),
-        F.col("n").alias("na"),
-    )
-    ab = old_arrs.select(
-        F.col("doc_id").alias("old_doc"),
-        F.col("arr").alias("arr_b"),
-        F.col("n").alias("nb"),
-    )
-    shared = F.size(F.array_intersect("arr_a", "arr_b"))
-    union = F.col("na") + F.col("nb") - shared
-    return (
-        cand.join(aa, "new_doc")
-        .join(ab, "old_doc")
-        .filter(F.lit(JPF_TAU_DEN) * shared >= F.lit(JPF_TAU_NUM) * union)
-        .select("new_doc", "old_doc")
-    )
+    shared = F.size(F.array_intersect(arr_a, arr_b))
+    union = F.size(arr_a) + F.size(arr_b) - shared
+    return F.lit(JPF_TAU_DEN) * shared >= F.lit(JPF_TAU_NUM) * union
 
 
 def process_jaccard_batch(
@@ -170,52 +151,27 @@ def process_jaccard_batch(
     """Admit one micro-batch of (doc_id, text) against the Jaccard
     index. Stream order within the batch is doc_id order (the replay
     contract); a batch doc can duplicate an earlier KEPT batch doc,
-    resolved greedily DataFrame-side."""
+    resolved greedily DataFrame-side (``streaming/near_dup.py``)."""
     spark = batch.sparkSession
-    token = None if epoch_id is None else f"epoch:{epoch_id}"
     arrs_new = shingle_arrays(batch).localCheckpoint(eager=True)
     pre_new = prefix_rows(arrs_new).localCheckpoint(eager=True)
 
-    if arr_table.exists():
-        idx_arrs = arr_table.read(spark)
-        idx_pre = prefix_table.read(spark)
-        cand_idx = _candidates(pre_new, idx_pre, strict_lt=False)
-        dup_vs_index = _verified_pairs(arrs_new, idx_arrs, cand_idx)
-        flagged = dup_vs_index.groupBy("new_doc").agg(
-            F.min("old_doc").alias("dup_of")
+    def probe() -> DataFrame:
+        cand = _candidates(pre_new, prefix_table.read(spark), within_batch=False)
+        return verified_pairs(
+            cand, arrs_new, arr_table.read(spark), "arr", _jaccard_accepts
         )
-    else:
-        flagged = spark.createDataFrame([], "new_doc bigint, dup_of bigint")
-    flagged = flagged.localCheckpoint(eager=True)
 
     # within-batch: larger doc_id is the "new" side (keep-first)
-    cand_local = _candidates(pre_new, pre_new, strict_lt=True)
-    dup_local = _verified_pairs(arrs_new, arrs_new, cand_local).localCheckpoint(
-        eager=True
+    cand_local = _candidates(pre_new, pre_new, within_batch=True)
+    admit_batch(
+        batch.select("doc_id"),
+        [(arr_table, arrs_new), (prefix_table, pre_new)],
+        probe,
+        verified_pairs(cand_local, arrs_new, arrs_new, "arr", _jaccard_accepts),
+        flags_table,
+        epoch_id,
     )
-    local_flagged = _resolve_greedy_keep_first(
-        batch.select("doc_id"), dup_local, flagged
-    )
-    flagged = flagged.unionByName(local_flagged)
-
-    flags = (
-        batch.select("doc_id")
-        .join(flagged, batch.doc_id == flagged.new_doc, "left")
-        .select(
-            "doc_id",
-            F.col("dup_of"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    flags_table.append(flags, token=token)
-
-    kept = flags.filter(~F.col("is_dup")).select("doc_id")
-    arr_table.append(arrs_new.join(kept, "doc_id"), token=token)
-    prefix_table.append(pre_new.join(kept, "doc_id"), token=token)
-
-    for t in (flags_table, arr_table, prefix_table):
-        t.maybe_compact(spark)
 
 
 def start_incremental_jaccard_dedup(
@@ -227,24 +183,11 @@ def start_incremental_jaccard_dedup(
     checkpoint_dir: str,
 ):
     """File-replayed document stream → per-batch incremental exact-
-    Jaccard dedup. One file per trigger keeps batch boundaries
-    deterministic for the parity test; a Kafka source swaps in behind
-    the same foreachBatch."""
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        process_jaccard_batch(
-            batch, arr_table, prefix_table, flags_table, epoch_id=epoch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    Jaccard dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "doc_id bigint, text string", source_dir),
+        lambda b, e: process_jaccard_batch(
+            b, arr_table, prefix_table, flags_table, epoch_id=e
+        ),
+        checkpoint_dir,
     )

@@ -24,13 +24,8 @@ driver-side (bounded: K rows, never corpus rows).
 
 Cluster blocking bounds probe cost to |batch| x cluster-population —
 the index is stored WITH its cluster key, so the probe is a cluster-
-keyed equi-join, never batch x index. Within-batch duplicate
-resolution reuses the generic DataFrame-side greedy fixpoint.
-
-Replay safety: every commit carries an ``epoch:<id>`` idempotency
-token, and the probe excludes self-pairs, so an at-least-once
-foreachBatch re-delivery recomputes the identical flag set and no-ops
-on commit.
+keyed equi-join, never batch x index. Admission (keep-first greedy,
+epoch tokens, replay safety): ``streaming/near_dup.py``.
 """
 
 from __future__ import annotations
@@ -43,7 +38,11 @@ from flink_stream_spark.operators.similarity import (
     _scaled_expr,
     _sdot,
 )
-from flink_stream_spark.streaming.dedup_stream import _resolve_greedy_keep_first
+from flink_stream_spark.streaming.near_dup import (
+    admit_batch,
+    replay_parquet,
+    run_per_batch,
+)
 from flink_stream_spark.tables.managed import ManagedTable
 
 
@@ -81,13 +80,27 @@ def scale_and_assign(batch: DataFrame, cent_ids, C) -> DataFrame:
     )
 
 
-def _verified_dup_pairs(cand: DataFrame) -> DataFrame:
-    """Exact cosine verify over cluster-blocked candidate pairs carrying
-    both scaled vectors; same threshold arithmetic as the batch kernel."""
+def _cosine_dup_pairs(new: DataFrame, old: DataFrame, within_batch: bool) -> DataFrame:
+    """Cluster-blocked candidate pairs carrying both scaled vectors,
+    exact cosine >= SEMDEDUP_TAU verified with the batch kernel's
+    threshold arithmetic. Identity filter as in
+    ``near_dup.band_candidates``."""
+    cols = ("vec_id", "cl", "s", "nrm")
+    n_side = new.select(*cols).toDF("new_doc", "cl_new", "s_new", "nrm_new")
+    o_side = old.select(*cols).toDF("old_doc", "cl_old", "s_old", "nrm_old")
+    ident = (
+        F.col("old_doc") < F.col("new_doc")
+        if within_batch
+        else F.col("new_doc") != F.col("old_doc")
+    )
     cos = _sdot(F.col("s_new"), F.col("s_old")) / (
         F.col("nrm_new") * F.col("nrm_old")
     )
-    return cand.filter(cos >= F.lit(SEMDEDUP_TAU)).select("new_doc", "old_doc")
+    return (
+        n_side.join(o_side, (F.col("cl_new") == F.col("cl_old")) & ident)
+        .filter(cos >= F.lit(SEMDEDUP_TAU))
+        .select("new_doc", "old_doc")
+    )
 
 
 def process_semdedup_batch(
@@ -102,72 +115,15 @@ def process_semdedup_batch(
     the per-cluster kept-vector index. Stream order within a batch is
     vec_id order (the replay contract)."""
     spark = batch.sparkSession
-    token = None if epoch_id is None else f"epoch:{epoch_id}"
     new = scale_and_assign(batch, cent_ids, C).localCheckpoint(eager=True)
-
-    n_side = new.select(
-        F.col("vec_id").alias("new_doc"),
-        F.col("cl").alias("cl_n"),
-        F.col("s").alias("s_new"),
-        F.col("nrm").alias("nrm_new"),
+    admit_batch(
+        batch.select("vec_id"),
+        [(index_table, new)],
+        lambda: _cosine_dup_pairs(new, index_table.read(spark), within_batch=False),
+        _cosine_dup_pairs(new, new, within_batch=True),
+        flags_table,
+        epoch_id,
     )
-    if index_table.exists():
-        idx = index_table.read(spark)
-        i_side = idx.select(
-            F.col("vec_id").alias("old_doc"),
-            F.col("cl").alias("cl_i"),
-            F.col("s").alias("s_old"),
-            F.col("nrm").alias("nrm_old"),
-        )
-        cand_idx = n_side.join(
-            i_side,
-            (F.col("cl_n") == F.col("cl_i"))
-            & (F.col("new_doc") != F.col("old_doc")),
-        )
-        flagged = (
-            _verified_dup_pairs(cand_idx)
-            .groupBy("new_doc")
-            .agg(F.min("old_doc").alias("dup_of"))
-        )
-    else:
-        flagged = spark.createDataFrame([], "new_doc bigint, dup_of bigint")
-    flagged = flagged.localCheckpoint(eager=True)
-
-    # within-batch: same cluster blocking, smaller vec_id is "old"
-    b_side = new.select(
-        F.col("vec_id").alias("old_doc"),
-        F.col("cl").alias("cl_i"),
-        F.col("s").alias("s_old"),
-        F.col("nrm").alias("nrm_old"),
-    )
-    cand_local = n_side.join(
-        b_side,
-        (F.col("cl_n") == F.col("cl_i"))
-        & (F.col("old_doc") < F.col("new_doc")),
-    )
-    dup_local = _verified_dup_pairs(cand_local).localCheckpoint(eager=True)
-    local_flagged = _resolve_greedy_keep_first(
-        batch.select(F.col("vec_id").alias("doc_id")), dup_local, flagged
-    )
-    flagged = flagged.unionByName(local_flagged)
-
-    flags = (
-        batch.select(F.col("vec_id").alias("doc_id"))
-        .join(flagged, F.col("doc_id") == F.col("new_doc"), "left")
-        .select(
-            "doc_id",
-            F.col("dup_of"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    flags_table.append(flags, token=token)
-
-    kept = flags.filter(~F.col("is_dup")).select(F.col("doc_id").alias("vec_id"))
-    index_table.append(new.join(kept, "vec_id"), token=token)
-
-    for t in (flags_table, index_table):
-        t.maybe_compact(spark)
 
 
 def start_incremental_semdedup(
@@ -180,24 +136,11 @@ def start_incremental_semdedup(
     checkpoint_dir: str,
 ):
     """File-replayed embedding stream → per-batch incremental semantic
-    dedup. One file per trigger keeps batch boundaries deterministic
-    for the parity tests; a Kafka/object-store source swaps in behind
-    the same foreachBatch."""
-    stream = (
-        spark.readStream.schema("vec_id bigint, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        process_semdedup_batch(
-            batch, cent_ids, C, index_table, flags_table, epoch_id=epoch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "vec_id bigint, embedding array<float>", source_dir),
+        lambda b, e: process_semdedup_batch(
+            b, cent_ids, C, index_table, flags_table, epoch_id=e
+        ),
+        checkpoint_dir,
     )

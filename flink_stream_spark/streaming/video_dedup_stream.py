@@ -16,63 +16,30 @@ keep-FIRST semantics in stream order, matching the other twins.
 
 The index stores the raw signal (block means), not pre-exploded band
 values, so banding is re-derived per batch as a pure column expression
-(``video_band_vals``) over the stored signature — store the signal,
-derive the blocking, and the index never needs rewriting if the
-banding policy changes. The batch query's hot-band cap is deliberately
-NOT applied on the probe side (the image/audio twins' argument: an
-incremental probe against a capped index silently drops true dups as
-buckets heat up over epochs; probe join cost is |batch| x bucket,
-bounded by the batch size). Within-batch duplicate resolution reuses
-the generic DataFrame-side greedy fixpoint — no pair ever reaches the
-driver.
-
-Replay safety: every commit carries an ``epoch:<id>`` idempotency
-token (at-least-once foreachBatch re-deliveries no-op), and the probe
-excludes self-pairs so a replay against a partially-committed epoch
-computes the identical flag set.
+(``VIDEO_MOTION.band_rows``, shared with the batch query) over the
+stored signature — store the signal, derive the blocking, and the
+index never needs rewriting if the banding policy changes. The batch
+query's hot-band cap is deliberately NOT applied on the probe side
+(the image/audio twins' argument: an incremental probe against a
+capped index silently drops true dups as buckets heat up over epochs;
+probe join cost is |batch| x bucket, bounded by the batch size).
+Admission (keep-first greedy, epoch tokens, replay safety):
+``streaming/near_dup.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from flink_stream_spark.operators.multimodal import (
-    VID_L1_MAX,
-    blockmeans_l1,
-    video_band_vals,
-    video_motion_stats,
+from flink_stream_spark.operators.multimodal import VIDEO_MOTION, video_motion_stats
+from flink_stream_spark.streaming.near_dup import (
+    admit_batch,
+    band_candidates,
+    replay_parquet,
+    run_per_batch,
+    verified_pairs,
 )
-from flink_stream_spark.streaming.dedup_stream import _resolve_greedy_keep_first
 from flink_stream_spark.tables.managed import ManagedTable
-
-
-def _explode_bands(sigs: DataFrame) -> DataFrame:
-    # band_val > 0: all-zero bands (zero-padding tail frames, or the
-    # undecodable-payload fallback row) nominate nothing — same policy
-    # as the batch kernel (video_near_dup_pairs).
-    return sigs.select(
-        "doc_id", F.posexplode(video_band_vals()).alias("band_idx", "band_val")
-    ).filter(F.col("band_val") > 0)
-
-
-def _verified_dup_pairs(
-    new_sigs: DataFrame, index_sigs: DataFrame, cand: DataFrame
-) -> DataFrame:
-    """Exact-L1 verify of candidate (new_doc, old_doc) pairs — the
-    same codegen'd abs-diff chain as the batch query."""
-    sa = new_sigs.select(
-        F.col("doc_id").alias("new_doc"), F.col("block_means").alias("s_new")
-    )
-    sb = index_sigs.select(
-        F.col("doc_id").alias("old_doc"), F.col("block_means").alias("s_old")
-    )
-    return (
-        cand.join(sa, "new_doc")
-        .join(sb, "old_doc")
-        .filter(blockmeans_l1(F.col("s_new"), F.col("s_old")) <= VID_L1_MAX)
-        .select("new_doc", "old_doc")
-    )
 
 
 def process_video_batch(
@@ -86,78 +53,30 @@ def process_video_batch(
     (the replay contract); a batch clip can be a duplicate of an
     earlier KEPT batch clip, resolved greedily DataFrame-side."""
     spark = batch.sparkSession
-    token = None if epoch_id is None else f"epoch:{epoch_id}"
     sigs_new = (
         video_motion_stats(batch)
         .select("doc_id", "block_means")
         .localCheckpoint(eager=True)
     )
-    s_new = _explode_bands(sigs_new)
+    bands_new = VIDEO_MOTION.band_rows(sigs_new)
 
-    if index_table.exists():
+    def probe() -> DataFrame:
         idx = index_table.read(spark)
-        s_idx = _explode_bands(idx)
-        cand_idx = (
-            s_new.alias("n")
-            .join(
-                s_idx.alias("i"),
-                (F.col("n.band_idx") == F.col("i.band_idx"))
-                & (F.col("n.band_val") == F.col("i.band_val"))
-                & (F.col("n.doc_id") != F.col("i.doc_id")),
-            )
-            .select(
-                F.col("n.doc_id").alias("new_doc"),
-                F.col("i.doc_id").alias("old_doc"),
-            )
-            .distinct()
-        )
-        dup_vs_index = _verified_dup_pairs(sigs_new, idx, cand_idx)
-        flagged = dup_vs_index.groupBy("new_doc").agg(
-            F.min("old_doc").alias("dup_of")
-        )
-    else:
-        flagged = spark.createDataFrame([], "new_doc bigint, dup_of bigint")
-    flagged = flagged.localCheckpoint(eager=True)
+        idx_bands = VIDEO_MOTION.band_rows(idx)
+        cand = band_candidates(bands_new, idx_bands, within_batch=False)
+        return verified_pairs(cand, sigs_new, idx, "block_means", VIDEO_MOTION.near)
 
-    # within-batch: same banding, smaller-id side is the "old" doc
-    cand_local = (
-        s_new.alias("a")
-        .join(
-            s_new.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("b.doc_id").alias("new_doc"), F.col("a.doc_id").alias("old_doc")
-        )
-        .distinct()
+    cand_local = band_candidates(bands_new, bands_new, within_batch=True)
+    admit_batch(
+        batch.select("doc_id"),
+        [(index_table, sigs_new)],
+        probe,
+        verified_pairs(
+            cand_local, sigs_new, sigs_new, "block_means", VIDEO_MOTION.near
+        ),
+        flags_table,
+        epoch_id,
     )
-    dup_local = _verified_dup_pairs(sigs_new, sigs_new, cand_local).localCheckpoint(
-        eager=True
-    )
-    local_flagged = _resolve_greedy_keep_first(
-        batch.select("doc_id"), dup_local, flagged
-    )
-    flagged = flagged.unionByName(local_flagged)
-
-    flags = (
-        batch.select("doc_id")
-        .join(flagged, batch.doc_id == flagged.new_doc, "left")
-        .select(
-            "doc_id",
-            F.col("dup_of"),
-            F.col("dup_of").isNotNull().alias("is_dup"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    flags_table.append(flags, token=token)
-
-    kept = flags.filter(~F.col("is_dup")).select("doc_id")
-    index_table.append(sigs_new.join(kept, "doc_id"), token=token)
-
-    for t in (flags_table, index_table):
-        t.maybe_compact(spark)
 
 
 def start_incremental_video_dedup(
@@ -167,23 +86,9 @@ def start_incremental_video_dedup(
     flags_table: ManagedTable,
     checkpoint_dir: str,
 ):
-    """File-replayed media stream → per-batch incremental video dedup.
-    One file per trigger keeps batch boundaries deterministic for the
-    parity test; a Kafka/object-store source swaps in behind the same
-    foreachBatch."""
-    stream = (
-        spark.readStream.schema("doc_id bigint, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        process_video_batch(batch, index_table, flags_table, epoch_id=epoch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    """File-replayed media stream → per-batch incremental video dedup."""
+    return run_per_batch(
+        replay_parquet(spark, "doc_id bigint, payload binary", source_dir),
+        lambda b, e: process_video_batch(b, index_table, flags_table, epoch_id=e),
+        checkpoint_dir,
     )

@@ -11,7 +11,8 @@ import os
 import numpy as np
 
 from flink_stream_spark.operators.multimodal import (
-    envelope_near_dup_pairs,
+    AUDIO_ENVELOPE,
+    banded_l1_near_dup_pairs,
     wav_envelope_stats,
 )
 from flink_stream_spark.operators.wav import encode_wav
@@ -115,7 +116,9 @@ def test_incremental_audio_dedup_matches_greedy_batch(spark, tmp_path):
     stats = wav_envelope_stats(media).select("doc_id", "env")
     pairs = [
         (r["doc_a"], r["doc_b"])
-        for r in envelope_near_dup_pairs(stats, cap_hot=False).collect()
+        for r in banded_l1_near_dup_pairs(
+            stats, AUDIO_ENVELOPE, cap_hot=False
+        ).collect()
     ]
     kept_ref, dup_of_ref = _greedy_reference([d for d, _ in docs], pairs)
 

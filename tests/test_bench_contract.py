@@ -69,6 +69,29 @@ def test_bench_json_contract():
     doc = _run_bench({"SPARK_GRAFT_BENCH_ONLY": ",".join(SUBSET)}, timeout=600)
     _assert_contract(doc, min_queries=10)
     assert set(doc["queries"]) == set(SUBSET)
+    # a subset run identifies itself on the official line ...
+    assert doc["subset"] is True
+    assert doc["n_queries"] == len(SUBSET)
+    # ... and without the knob the official line is byte-identical to
+    # the untagged form (checked on json_lines itself: a full run is
+    # the nightly test below)
+    sys.path.insert(0, REPO)
+    from bench import json_lines
+
+    timings = {"q1_pricing_summary": 1.234, "text_fingerprint": 0.5}
+    full, line = json_lines(timings, "0.1", subset=False)
+    assert line == (
+        '{"metric":"headline_core_total","value":1.73,"unit":"sec",'
+        '"queries":{"q1_pricing_summary":1.23,"text_fingerprint":0.5},'
+        '"sf":0.1}'
+    )
+    assert full == (
+        '{"metric":"headline_full","value":1.734,"unit":"sec",'
+        '"queries":{"q1_pricing_summary":1.234,"text_fingerprint":0.5},'
+        '"sf":0.1}'
+    )
+    tagged = json.loads(json_lines(timings, "0.1", subset=True)[1])
+    assert (tagged["subset"], tagged["n_queries"]) == (True, 2)
 
 
 def test_bench_only_rejects_unknown_names():

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
@@ -118,21 +119,77 @@ def test_adversarial_clique_batch_no_driver_pairs(spark, tmp_path):
     assert bands.read(spark).select("doc_id").distinct().count() == 1
 
 
-def test_process_batch_replay_is_noop(spark, tmp_path):
-    """At-least-once replay: re-running an epoch whose commits landed
-    must not change any table (epoch-token idempotency — the ADVICE
-    double-append hazard)."""
-    from flink_stream_spark.streaming.dedup_stream import process_batch
+def _replay_twins():
+    """Per twin: (batch factory, index-table names, process call). Each
+    batch holds originals AND later near-dups, so the replayed epoch
+    runs the index probe and the within-batch resolve."""
+    from tests.test_audio_dedup_stream import _corpus as audio_corpus
+    from tests.test_image_dedup_stream import _corpus as image_corpus
+    from tests.test_jaccard_dedup_stream import _corpus as text_corpus
+    from tests.test_semdedup_stream import _centroids
+    from tests.test_semdedup_stream import _corpus as vec_corpus
+    from tests.test_video_dedup_stream import _corpus as video_corpus
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, "totally different text here now")],
-        "doc_id bigint, text string",
+    from flink_stream_spark.streaming.audio_dedup_stream import process_audio_batch
+    from flink_stream_spark.streaming.dedup_stream import process_batch
+    from flink_stream_spark.streaming.image_dedup_stream import process_image_batch
+    from flink_stream_spark.streaming.jaccard_dedup_stream import (
+        process_jaccard_batch,
     )
+    from flink_stream_spark.streaming.semdedup_stream import process_semdedup_batch
+    from flink_stream_spark.streaming.video_dedup_stream import process_video_batch
+
+    def text(spark):
+        return spark.createDataFrame(text_corpus()[:8], "doc_id bigint, text string")
+
+    def media(corpus):
+        docs = corpus()
+        return lambda spark: spark.createDataFrame(
+            docs[:4] + docs[8:10], "doc_id bigint, payload binary"
+        )
+
+    def vectors(spark):
+        docs = vec_corpus()
+        return spark.createDataFrame(
+            docs[:4] + docs[16:18], "vec_id bigint, embedding array<float>"
+        )
+
+    cent_ids, C = _centroids()
+    return {
+        "text": (text, ("bands", "shingles"), process_batch),
+        "jaccard": (text, ("arrs", "prefixes"), process_jaccard_batch),
+        "semdedup": (
+            vectors,
+            ("index",),
+            lambda b, *t, epoch_id: process_semdedup_batch(
+                b, cent_ids, C, *t, epoch_id=epoch_id
+            ),
+        ),
+        "image": (media(image_corpus), ("index",), process_image_batch),
+        "audio": (media(audio_corpus), ("index",), process_audio_batch),
+        "video": (media(video_corpus), ("index",), process_video_batch),
+    }
+
+
+@pytest.mark.parametrize(
+    "twin", ["text", "jaccard", "semdedup", "image", "audio", "video"]
+)
+def test_process_replay_is_noop(spark, tmp_path, twin):
+    """At-least-once replay: re-running an epoch whose commits landed
+    must not change any table — every commit carries the epoch token
+    (the double-append hazard), for every streaming dedup twin."""
+    make_batch, index_names, process = _replay_twins()[twin]
+    batch = make_batch(spark)
     wh = Warehouse(str(tmp_path / "wh"))
-    bands, shingles, flags = wh.table("b"), wh.table("s"), wh.table("f")
-    process_batch(docs, bands, shingles, flags, epoch_id=7)
-    v = (bands.current_version(), shingles.current_version(), flags.current_version())
-    n_flags = flags.read(spark).count()
-    process_batch(docs, bands, shingles, flags, epoch_id=7)  # replay
-    assert (bands.current_version(), shingles.current_version(), flags.current_version()) == v
-    assert flags.read(spark).count() == n_flags
+    tables = [wh.table(n) for n in (*index_names, "flags")]
+    process(batch, *tables, epoch_id=7)
+
+    def state():
+        return [(t.current_version(), t.read(spark).count()) for t in tables]
+
+    before = state()
+    assert all(v > 0 for v, _ in before)
+    process(batch, *tables, epoch_id=7)  # replay
+    assert state() == before
+    # the replayed flags still flag at least one duplicate
+    assert tables[-1].read(spark).filter(F.col("is_dup")).count() > 0

@@ -4,8 +4,8 @@ pipeline must flag exactly what a greedy keep-first pass over the
 COMPLETE (brute-force) J >= 0.6 pair set flags — the twin inherits
 the batch join's complete-recall property because prefix filtering is
 recall-complete under any single consistent token order — independent
-of where micro-batch boundaries fall, with a bounded index and
-idempotent replay."""
+of where micro-batch boundaries fall, with a bounded index. Replay
+idempotence: ``tests/test_dedup_stream.py``."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ import os
 
 from flink_stream_spark.operators.dedup import JPF_TAU_DEN, JPF_TAU_NUM
 from flink_stream_spark.streaming.jaccard_dedup_stream import (
-    process_jaccard_batch,
     start_incremental_jaccard_dedup,
 )
 from flink_stream_spark.tables.managed import Warehouse
@@ -173,20 +172,3 @@ def test_jaccard_stream_boundary_independence(spark, tmp_path):
         (r["doc_id"], r["dup_of"], r["is_dup"]) for r in f3.read(spark).collect()
     }
     assert one == three
-
-
-def test_jaccard_stream_replay_idempotent(spark, tmp_path):
-    """At-least-once redelivery: re-applying the SAME epoch is a
-    commit no-op (token dedup), so flags and index don't double."""
-    docs = _corpus()[:8]
-    batch = spark.createDataFrame(docs, "doc_id bigint, text string")
-    wh = Warehouse(str(tmp_path / "wh_replay"))
-    arrs = wh.table("jac_arrs")
-    prefixes = wh.table("jac_prefixes")
-    flags = wh.table("jac_flags")
-    process_jaccard_batch(batch, arrs, prefixes, flags, epoch_id=7)
-    n_flags = flags.read(spark).count()
-    n_arrs = arrs.read(spark).count()
-    process_jaccard_batch(batch, arrs, prefixes, flags, epoch_id=7)  # replay
-    assert flags.read(spark).count() == n_flags
-    assert arrs.read(spark).count() == n_arrs

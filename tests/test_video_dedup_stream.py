@@ -16,8 +16,9 @@ from flink_stream_spark.operators.multimodal import (
     VID_FRAMES,
     VID_H,
     VID_W,
+    VIDEO_MOTION,
+    banded_l1_near_dup_pairs,
     video_motion_stats,
-    video_near_dup_pairs,
 )
 from flink_stream_spark.operators.y4m import encode_y4m
 from flink_stream_spark.streaming.video_dedup_stream import (
@@ -117,7 +118,9 @@ def test_incremental_video_dedup_matches_greedy_batch(spark, tmp_path):
     stats = video_motion_stats(media).select("doc_id", "block_means")
     pairs = [
         (r["doc_a"], r["doc_b"])
-        for r in video_near_dup_pairs(stats, cap_hot=False).collect()
+        for r in banded_l1_near_dup_pairs(
+            stats, VIDEO_MOTION, cap_hot=False
+        ).collect()
     ]
     kept_ref, dup_of_ref = _greedy_reference([d for d, _ in docs], pairs)
 
