@@ -18,9 +18,10 @@ stand in for an encoded image) — byte lengths, checksums and derived
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -33,6 +34,78 @@ from flink_stream_spark.operators.sortout import sorted_result
 META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, fake_width int, fake_height int, checksum string"
 )
+
+
+# --- text-to-media source of the codec round-trips ------------------------
+#
+# The codec round-trips synthesize media from document text, encode it
+# with a real codec, decode it back, and hash-match an oracle that
+# derives the decoded statistics straight from the text. The oracles
+# address CODE POINTS (ord/substr) while the encoders read UTF-8 BYTES,
+# so both engines keep ASCII documents only: ``_ASCII_P`` is the
+# oracle-side gate (``strlen`` is the UTF-8 byte length; a BLOB cast
+# would parse backslash escapes and reject non-ASCII text) and
+# ``ascii_docs`` the Spark-side one.
+_ASCII_P = """p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
+               WHERE LENGTH(text) = strlen(text))"""
+
+
+def ascii_docs(docs: DataFrame) -> DataFrame:
+    """The Spark side of ``_ASCII_P``: documents whose text is pure
+    ASCII (chars == UTF-8 bytes)."""
+    return docs.filter(F.length("text") == F.octet_length("text"))
+
+
+def text_media(
+    docs: DataFrame, encode_one: Callable[[int, np.ndarray], bytes]
+) -> DataFrame:
+    """documents -> (doc_id, payload binary): one encoded media payload
+    per ASCII document, ``encode_one(doc_id, text_bytes)`` applied to
+    each document's UTF-8 bytes (a read-only uint8 array, possibly
+    empty). The source of every codec round-trip query.
+
+    Plan: scan → ASCII filter → Exchange hashpartitioning(doc_id,
+    defaultParallelism) → MapInPandas (this encode) → the caller's
+    decode MapInPandas in the same stage. The exchange is the one
+    partition-count site of the round-trips: a single-row-group parquet
+    fixture arrives as 1-2 splits, which would serialize the CPU-bound
+    pure-Python codecs onto 1-2 cores. The queries' ORDER BY then adds
+    ``sorted_result``'s result-sized hash exchange under the range
+    exchange, so a round-trip plan holds two hash exchanges and one
+    range exchange around its two Python stages (asserted by
+    tests/test_plans.py::test_codec_roundtrip_plan_shape)."""
+    src = (
+        ascii_docs(docs)
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    )
+
+    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payloads = [
+                encode_one(int(doc_id), np.frombuffer(bytes(b), dtype=np.uint8))
+                for doc_id, b in zip(pdf["doc_id"], pdf["payload"])
+            ]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return src.mapInPandas(_encode, "doc_id bigint, payload binary")
+
+
+def _cycled(text: np.ndarray, size: int) -> np.ndarray:
+    """``size`` uint8 values cycling through the text bytes (value i =
+    byte[i mod n]); all zeros for an empty text."""
+    if len(text) == 0:
+        return np.zeros(size, dtype=np.uint8)
+    return text[np.arange(size, dtype=np.int64) % len(text)]
+
+
+def _spread_head(text: np.ndarray, size: int) -> np.ndarray:
+    """``size`` uint8 luma values reading the text HEAD: (byte[i] · 37)
+    mod 256 for i < n, else 0 (zero-padded; longer texts truncate)."""
+    head = text[:size]
+    px = np.zeros(size, dtype=np.uint8)
+    px[: len(head)] = (head.astype(np.int64) * 37) % 256
+    return px
 
 
 _PILLOW_PROBE: list = []  # [module-or-None] once probed
@@ -254,9 +327,9 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     "multimodal_metadata_extract",
     """
     SELECT doc_id,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-           CAST((octet_length(CAST(text AS BLOB)) % 640) + 1 AS INTEGER) AS fake_width,
-           CAST((octet_length(CAST(text AS BLOB)) % 480) + 1 AS INTEGER) AS fake_height,
+           CAST(strlen(text) AS BIGINT) AS n_bytes,
+           CAST((strlen(text) % 640) + 1 AS INTEGER) AS fake_width,
+           CAST((strlen(text) % 480) + 1 AS INTEGER) AS fake_height,
            md5(text) AS checksum
     FROM documents
     ORDER BY doc_id
@@ -326,16 +399,16 @@ def resize_media(media: DataFrame, factor: int = 4) -> DataFrame:
 
 @register(
     "multimodal_resize",
-    """
-    WITH resized AS (
-      SELECT doc_id,
-             octet_length(CAST(text AS BLOB)) AS n_bytes,
+    f"""
+    WITH {_ASCII_P},
+    resized AS (
+      SELECT doc_id, n AS n_bytes,
              list_aggregate(
                list_transform(
-                 generate_series(1, ((LENGTH(text) - 1) // 4) + 1),
+                 generate_series(1, ((n - 1) // 4) + 1),
                  i -> substr(text, (i - 1) * 4 + 1, 1)),
                'string_agg', '') AS r
-      FROM documents)
+      FROM p)
     SELECT doc_id, CAST(n_bytes AS BIGINT) AS n_bytes,
            CAST(LENGTH(r) AS BIGINT) AS resized_bytes,
            md5(r) AS resized_checksum
@@ -345,11 +418,12 @@ def resize_media(media: DataFrame, factor: int = 4) -> DataFrame:
     group="multimodal",
     doc="Resize plumbing: payload → every-4th-byte decimation "
     "(deterministic resample fake) via Arrow-batched mapInPandas; "
-    "size + checksum oracle-checked.",
+    "size + checksum oracle-checked over ASCII documents (the oracle "
+    "decimates code points, the UDF bytes).",
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    media = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = ascii_docs(d).select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return sorted_result(resize_media(media), "doc_id")
 
 
@@ -388,8 +462,8 @@ def extract_features(media: DataFrame) -> DataFrame:
     "multimodal_feature_extract",
     f"""
     WITH b AS (
-      SELECT doc_id, hex(CAST(text AS BLOB)) AS h,
-             octet_length(CAST(text AS BLOB)) AS n
+      SELECT doc_id, hex(encode(text)) AS h,
+             strlen(text) AS n
       FROM documents),
     bytes AS (
       SELECT doc_id, n,
@@ -431,10 +505,10 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multimodal_frame_sample",
     """
     WITH frames AS (
-      SELECT doc_id, unnest(generate_series(0, ((octet_length(CAST(text AS BLOB)) // 64) - 1))) AS frame_no,
-             octet_length(CAST(text AS BLOB)) AS n_bytes
+      SELECT doc_id, unnest(generate_series(0, ((strlen(text) // 64) - 1))) AS frame_no,
+             strlen(text) AS n_bytes
       FROM documents
-      WHERE octet_length(CAST(text AS BLOB)) >= 128)
+      WHERE strlen(text) >= 128)
     SELECT doc_id, CAST(frame_no AS INTEGER) AS frame_no,
            CAST(n_bytes AS BIGINT) AS n_bytes
     FROM frames
@@ -688,8 +762,7 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
 @register(
     "multimodal_image_dedup_dhash",
     f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id,
         list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
@@ -744,9 +817,11 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
     """,
     group="multimodal",
     doc="Image near-dup dedup: 64-bit dHash per payload (Arrow-batched; "
-    "PNG, GIF, and baseline-JPEG payloads decode to REAL pixels via "
-    "the stdlib+numpy codecs in operators/{png,gif,jpeg}.py and "
-    "block-mean downsample to the 8x9 grid — other payloads, "
+    "PNG, GIF, BMP, TIFF, and baseline and progressive JPEG payloads "
+    "decode to REAL pixels via the stdlib+numpy codecs in "
+    "operators/{png,gif,bmp,tiff,jpeg}.py, JPEGs normalized to their "
+    "EXIF orientation, and block-mean downsample to the 8x9 grid — "
+    "other payloads, "
     "including this fixture's text bytes, use the "
     "deterministic byte resample), Hamming-LSH blocking on CORPUS-ADAPTIVE "
     "bands — 8x8-bit / 4x16-bit / 2x32-bit chosen from one scalar "
@@ -787,22 +862,23 @@ def multimodal_image_dedup_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filter type. This is the strongest evidence the sandbox can produce
 # that the codec is real, at every fixture scale, on every document.
 PNGRT_H, PNGRT_W = 16, 18  # 2x the 8x9 hash grid -> 2x2 block means
+_RT_PLAN = (
+    " Plan (see text_media): a doc_id hash spread, then the encode and "
+    "decode mapInPandas run back to back in one stage, then "
+    "sorted_result's exchange under the range sort."
+)
 
 
-@register(
-    "multimodal_png_roundtrip_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+def _dhash_grid_oracle(px: str) -> str:
+    """Oracle of a dHash round-trip: the 8x9 grid straight from the
+    text (``px``: the SQL value of grid cell ``i`` of a non-empty
+    text; an empty text is all zeros), reduced to the dHash bands."""
+    return f"""
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id,
         list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0 ELSE (
-                 ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               ) // 4 END) AS px
+          i -> CASE WHEN n = 0 THEN 0 ELSE {px} END) AS px
       FROM p),
     b AS (
       SELECT doc_id,
@@ -812,7 +888,31 @@ PNGRT_H, PNGRT_W = 16, 18  # 2x the 8x9 hash grid -> 2x2 block means
                       THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
       FROM s)
     SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    """
+
+
+# PNG/GIF/BMP: 2x2 block means of the 16x18 image (``_rt_image``)
+_DHASH_2X2_DUCK = _dhash_grid_oracle(
+    f"""(
+                 ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
+               + ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
+               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
+               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
+               ) // 4"""
+)
+# baseline/progressive JPEG, EXIF, TIFF: the 8x9 grid itself, cycled
+_DHASH_CYCLIC_DUCK = _dhash_grid_oracle("ord(substr(text, (i % n) + 1, 1))")
+
+
+def _rt_image(text: np.ndarray) -> np.ndarray:
+    """The 16x18 grayscale image of the PNG/GIF/BMP round-trips:
+    pixel[y][x] = byte[(y*18+x) mod n]."""
+    return _cycled(text, PNGRT_H * PNGRT_W).reshape(PNGRT_H, PNGRT_W)
+
+
+@register(
+    "multimodal_png_roundtrip_dhash",
+    _DHASH_2X2_DUCK,
     group="multimodal",
     doc="PNG codec round-trip under the oracle: text bytes → 16x18 "
     "grayscale pixels → REAL PNG encode (scanline filter = doc_id % 5, "
@@ -820,70 +920,21 @@ PNGRT_H, PNGRT_W = 16, 18  # 2x the 8x9 hash grid -> 2x2 block means
     "unfilter, operators/png.py) → 2x2 block-mean grid → dHash bands. "
     "The oracle derives the grid directly from the text, so a hash "
     "match proves the decoder reproduced every pixel for every filter "
-    "type. Both mapInPandas stages are narrow (no shuffle) — at scale "
-    "this is the embarrassingly-parallel decode posture of the dedup "
-    "query itself.",
+    "type." + _RT_PLAN,
 )
 def multimodal_png_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.png import encode_png
 
-    d = load_table(spark, sf_dir, "documents")
-    # spread the per-doc container encode/decode across the cluster
-    # (the fixture parquet is 1-2 splits; the codec stage is the rare
-    # CPU-bound Python work — same posture as the JPEG round-trip)
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = text_media(
+        load_table(spark, sf_dir, "documents"),
+        lambda doc_id, text: encode_png(_rt_image(text), filter_type=doc_id % 5),
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(PNGRT_H * PNGRT_W, dtype=np.int64)
-        for pdf in batches:
-            pngs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                pix = (
-                    np.zeros((PNGRT_H, PNGRT_W), dtype=np.uint8)
-                    if n == 0
-                    else arr[idx % n].reshape(PNGRT_H, PNGRT_W)
-                )
-                pngs.append(encode_png(pix, filter_type=int(doc_id) % 5))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": pngs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
     return sorted_result(dhash_bands(media), "doc_id")
 
 
 @register(
     "multimodal_gif_roundtrip_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0 ELSE (
-                 ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               ) // 4 END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_2X2_DUCK,
     group="multimodal",
     doc="GIF codec round-trip under the oracle: the same 16x18 "
     "grayscale grid as the PNG round-trip, but encoded as a REAL "
@@ -895,70 +946,23 @@ def multimodal_png_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFram
     "same SQL as the PNG round-trip: same pixels, different "
     "container) derives the grid straight from the text, so a hash "
     "match proves the LZW decoder reproduced every pixel in both "
-    "row orders. Both mapInPandas stages narrow (no shuffle).",
+    "row orders." + _RT_PLAN,
 )
 def multimodal_gif_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.gif import encode_gif_gray
 
-    d = load_table(spark, sf_dir, "documents")
-    # spread the per-doc container encode/decode across the cluster
-    # (the fixture parquet is 1-2 splits; the codec stage is the rare
-    # CPU-bound Python work — same posture as the JPEG round-trip)
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = text_media(
+        load_table(spark, sf_dir, "documents"),
+        lambda doc_id, text: encode_gif_gray(
+            _rt_image(text).astype(np.int64), interlace=bool(doc_id % 2)
+        ),
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(PNGRT_H * PNGRT_W, dtype=np.int64)
-        for pdf in batches:
-            gifs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                pix = (
-                    np.zeros((PNGRT_H, PNGRT_W), dtype=np.int64)
-                    if n == 0
-                    else arr[idx % n].reshape(PNGRT_H, PNGRT_W).astype(np.int64)
-                )
-                gifs.append(
-                    encode_gif_gray(pix, interlace=bool(int(doc_id) % 2))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": gifs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
     return sorted_result(dhash_bands(media), "doc_id")
 
 
 @register(
     "multimodal_bmp_roundtrip_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0 ELSE (
-                 ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, ((i // 9) * 2 * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2) % n + 1, 1))
-               + ord(substr(text, (((i // 9) * 2 + 1) * {PNGRT_W} + (i % 9) * 2 + 1) % n + 1, 1))
-               ) // 4 END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_2X2_DUCK,
     group="multimodal",
     doc="BMP codec round-trip under the oracle: the same 16x18 "
     "grayscale grid as the PNG/GIF round-trips, encoded as a REAL "
@@ -970,50 +974,17 @@ def multimodal_gif_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFram
     "the grid straight from the text, so a hash match proves the "
     "decoder reproduced every pixel in every layout: palette "
     "lookup, BGR luma, 4-byte row padding (18 and 54 bytes/row both "
-    "pad), and both row orders. Both mapInPandas stages narrow (no "
-    "shuffle) — the embarrassingly-parallel decode posture of the "
-    "dedup query itself.",
+    "pad), and both row orders." + _RT_PLAN,
 )
 def multimodal_bmp_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.bmp import encode_bmp
 
-    d = load_table(spark, sf_dir, "documents")
-    # spread the per-doc container encode/decode across the cluster
-    # (the fixture parquet is 1-2 splits), same posture as the other
-    # codec round-trips
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = text_media(
+        load_table(spark, sf_dir, "documents"),
+        lambda doc_id, text: encode_bmp(
+            _rt_image(text), bpp=8 if doc_id % 2 == 0 else 24, top_down=doc_id % 4 >= 2
+        ),
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(PNGRT_H * PNGRT_W, dtype=np.int64)
-        for pdf in batches:
-            bmps = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                pix = (
-                    np.zeros((PNGRT_H, PNGRT_W), dtype=np.uint8)
-                    if n == 0
-                    else arr[idx % n].reshape(PNGRT_H, PNGRT_W)
-                )
-                did = int(doc_id)
-                bmps.append(
-                    encode_bmp(
-                        pix,
-                        bpp=8 if did % 2 == 0 else 24,
-                        top_down=(did % 4) >= 2,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": bmps})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
     return sorted_result(dhash_bands(media), "doc_id")
 
 
@@ -1044,26 +1015,49 @@ JPGRT_LAYOUTS = [
 ]
 
 
+def _jpeg_luma(text: np.ndarray) -> np.ndarray:
+    """The 64x72 luma of the JPEG round-trips: the cycled 8x9 grid,
+    each cell upscaled to a constant 8x8 block."""
+    grid = _cycled(text, DHASH_ROWS * 9).reshape(DHASH_ROWS, 9)
+    return np.repeat(np.repeat(grid, 8, 0), 8, 1)
+
+
+def _jpeg_rt_media(docs: DataFrame, encoder: Callable[..., bytes]) -> DataFrame:
+    """``text_media`` of the baseline and progressive JPEG round-trips,
+    which differ only in ``encoder``: the constant-block luma plus, for
+    the colour layouts (JPGRT_LAYOUTS[doc_id % 4]), two chroma planes,
+    at quality 100 with restart markers every 2 MCUs for odd doc_ids."""
+
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        y = _jpeg_luma(text)
+        layout = JPGRT_LAYOUTS[doc_id % 4]
+        planes = [y]
+        if layout is not None:
+            sh, sv = layout[0]
+            cw, ch = 72 // sh, 64 // sv
+            gh, gw = -(-ch // 8), -(-cw // 8)
+            # chroma planes of 8x8-CONSTANT blocks from the text bytes:
+            # constant blocks keep the entropy stream tiny (DC+EOB per
+            # block) while still driving the full chroma decode path; a
+            # random-pixel plane at quality 100 is incompressible and
+            # costs ~30x the symbols for zero extra coverage
+            for shift, fill in ((3, 128), (11, 64)):
+                cg = (
+                    np.full(gh * gw, fill, dtype=np.uint8)
+                    if len(text) == 0
+                    else text[(np.arange(gh * gw, dtype=np.int64) + shift) % len(text)]
+                ).reshape(gh, gw)
+                planes.append(np.repeat(np.repeat(cg, 8, 0), 8, 1)[:ch, :cw])
+        return encoder(
+            planes, layout, quality=100, restart_interval=2 if doc_id % 2 else 0
+        )
+
+    return text_media(docs, encode)
+
+
 @register(
     "multimodal_jpeg_roundtrip_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0
-               ELSE ord(substr(text, (i % n) + 1, 1)) END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_CYCLIC_DUCK,
     group="multimodal",
     doc="Baseline-JPEG codec round-trip under the oracle: text bytes → "
     "8x9 grid → constant 8x8 blocks (64x72 luma; constant blocks have "
@@ -1076,100 +1070,18 @@ JPGRT_LAYOUTS = [
     "crop) → block-mean grid → dHash bands. The oracle derives the "
     "grid straight from the text, so a hash match proves the decoder "
     "reproduced every luma pixel across all four layouts and the "
-    "restart path. Both mapInPandas stages narrow (no shuffle) — the "
-    "embarrassingly-parallel decode posture.",
+    "restart path." + _RT_PLAN,
 )
 def multimodal_jpeg_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.jpeg import encode_jpeg
 
-    d = load_table(spark, sf_dir, "documents")
-    # spread the per-doc encode/decode Python work across the cluster —
-    # the fixture parquet arrives as ONE split, and the entropy coding
-    # is the rare genuinely CPU-bound Python stage (same posture as
-    # dedup_exact_substr_sa)
-    par = spark.sparkContext.defaultParallelism
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(par, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gidx = np.arange(DHASH_ROWS * 9, dtype=np.int64)
-
-        def cplane(arr, n, gh, gw, ch, cw, shift, fill):
-            """Chroma plane of 8x8-CONSTANT blocks from text bytes —
-            constant blocks keep the entropy stream tiny (DC+EOB per
-            block) while still driving the full chroma decode path;
-            a random-pixel plane at quality 100 is incompressible and
-            costs ~30x the symbols for zero extra coverage."""
-            cg = (
-                np.full(gh * gw, fill, dtype=np.uint8)
-                if n == 0
-                else arr[(np.arange(gh * gw, dtype=np.int64) + shift) % n]
-            ).reshape(gh, gw)
-            return np.repeat(np.repeat(cg, 8, 0), 8, 1)[:ch, :cw]
-
-        for pdf in batches:
-            jpgs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                grid = (
-                    np.zeros(DHASH_ROWS * 9, dtype=np.uint8)
-                    if n == 0
-                    else arr[gidx % n]
-                ).reshape(DHASH_ROWS, 9)
-                y = np.repeat(np.repeat(grid, 8, 0), 8, 1)  # 64x72
-                layout = JPGRT_LAYOUTS[int(doc_id) % 4]
-                rst = 2 if int(doc_id) % 2 else 0
-                if layout is None:
-                    planes = [y]
-                    sampling = None
-                else:
-                    (sh, sv) = layout[0]
-                    cw, ch = 72 // sh, 64 // sv
-                    gh, gw = -(-ch // 8), -(-cw // 8)
-                    planes = [
-                        y,
-                        cplane(arr, n, gh, gw, ch, cw, 3, 128),
-                        cplane(arr, n, gh, gw, ch, cw, 11, 64),
-                    ]
-                    sampling = layout
-                jpgs.append(
-                    encode_jpeg(planes, sampling, quality=100,
-                                restart_interval=rst)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": jpgs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    media = _jpeg_rt_media(load_table(spark, sf_dir, "documents"), encode_jpeg)
     return sorted_result(dhash_bands(media), "doc_id")
 
 
 @register(
     "multimodal_exif_orientation_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0
-               ELSE ord(substr(text, (i % n) + 1, 1)) END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_CYCLIC_DUCK,
     group="multimodal",
     doc="EXIF-orientation normalization under the oracle: cameras "
     "record rotation as APP1/IFD0 tag 274 instead of rotating pixels, "
@@ -1186,14 +1098,12 @@ def multimodal_jpeg_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFra
     "every stored transform; any parse or transform bug shuffles the "
     "grid and breaks the hash corpus-wide. Constant 8x8 blocks keep "
     "quality-100 JPEG pixel-exact (blocks stay block-aligned under "
-    "all eight transforms since both dimensions are multiples of 8). "
-    "Narrow Arrow-batched stages, no shuffle.",
+    "all eight transforms since both dimensions are multiples of 8)."
+    + _RT_PLAN,
 )
 def multimodal_exif_orientation_dhash(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.jpeg import (
         EXIF_INVERSE,
         apply_exif_orientation,
@@ -1201,42 +1111,13 @@ def multimodal_exif_orientation_dhash(
         insert_exif_orientation,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    # ASCII gate: the oracle addresses code points (ord/substr) while
-    # this side reads UTF-8 bytes — exclude multi-byte docs in both
-    # engines identically (advisor note, round 8)
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(par, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        o = doc_id % 8 + 1
+        stored = apply_exif_orientation(_jpeg_luma(text), EXIF_INVERSE[o])
+        jpg = encode_jpeg([np.ascontiguousarray(stored)], quality=100)
+        return insert_exif_orientation(jpg, o)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gidx = np.arange(DHASH_ROWS * 9, dtype=np.int64)
-        for pdf in batches:
-            jpgs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                grid = (
-                    np.zeros(DHASH_ROWS * 9, dtype=np.uint8)
-                    if n == 0
-                    else arr[gidx % n]
-                ).reshape(DHASH_ROWS, 9)
-                displayed = np.repeat(np.repeat(grid, 8, 0), 8, 1)  # 64x72
-                o = int(doc_id) % 8 + 1
-                stored = np.ascontiguousarray(
-                    apply_exif_orientation(displayed, EXIF_INVERSE[o])
-                )
-                jpgs.append(
-                    insert_exif_orientation(
-                        encode_jpeg([stored], quality=100), o
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": jpgs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    media = text_media(load_table(spark, sf_dir, "documents"), encode)
     return sorted_result(dhash_bands(media), "doc_id")
 
 
@@ -1335,51 +1216,27 @@ def wav_envelope_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_stats, schema=AUDIO_STATS_SCHEMA)
 
 
+def _wav_samples(text: np.ndarray) -> np.ndarray:
+    """The WAVRT_N int16-range samples of the WAV/AIFF/FLAC round-trips:
+    sample[i] = byte[i mod n]·256 − 32768; silence for an empty text."""
+    if len(text) == 0:
+        return np.zeros(WAVRT_N, dtype=np.int64)
+    return _cycled(text, WAVRT_N).astype(np.int64) * 256 - 32768
+
+
 def _wav_media(d: DataFrame) -> DataFrame:
-    """documents -> (doc_id, payload): a REAL int16 mono WAV per doc,
-    samples synthesized from the text bytes (sample[i] =
-    byte[i mod n]·256 − 32768), so the oracle can derive everything
-    downstream of the codec straight from the text.
-
-    ASCII-only gate mirrored in _WAV_ENV_DUCK's p CTE: Spark
-    synthesizes samples from UTF-8 BYTES while the oracle can only
-    address CODE POINTS (ord/substr), so both engines exclude
-    multi-byte docs identically — a future non-ASCII fixture becomes
-    a visible row-set change, not a silent hash mismatch (advisor
-    note, round 8; same discipline as _wavfp_media)."""
-    import numpy as np
-
+    """documents -> (doc_id, payload): a REAL int16 mono WAV per doc of
+    ``_wav_samples``, so the oracle (``_WAV_ENV_DUCK``) can derive
+    everything downstream of the codec straight from the text."""
     from flink_stream_spark.operators.wav import encode_wav
 
-    # spread the per-doc container encode/decode across the cluster
-    # (the fixture parquet is 1-2 splits; the codec stage is the rare
-    # CPU-bound Python work — same posture as the JPEG round-trip)
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    return text_media(
+        d, lambda doc_id, text: encode_wav(_wav_samples(text), rate=WAVRT_RATE, bits=16)
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(WAVRT_N, dtype=np.int64)
-        for pdf in batches:
-            wavs = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                if n == 0:
-                    samples = np.zeros(WAVRT_N, dtype=np.int64)
-                else:
-                    samples = arr[idx % n].astype(np.int64) * 256 - 32768
-                wavs.append(encode_wav(samples, rate=WAVRT_RATE, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": wavs})
-
-    return src.mapInPandas(_encode, "doc_id bigint, payload binary")
 
 
 _WAV_ENV_DUCK = f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id,
         list_transform(generate_series(0, {WAVRT_N - 1}),
@@ -1397,10 +1254,8 @@ _WAV_ENV_DUCK = f"""
                // {WAVRT_N // ENV_WINDOWS}) AS env
       FROM s)
 """
-
-
-@register(
-    "multimodal_wav_roundtrip_stats",
+# the WAV/AIFF/FLAC round-trips: same samples, three containers
+_WAV_STATS_DUCK = (
     _WAV_ENV_DUCK
     + f"""
     SELECT doc_id,
@@ -1412,7 +1267,13 @@ _WAV_ENV_DUCK = f"""
            list_transform(env, x -> CAST(x AS BIGINT)) AS env
     FROM e
     ORDER BY doc_id
-    """,
+    """
+)
+
+
+@register(
+    "multimodal_wav_roundtrip_stats",
+    _WAV_STATS_DUCK,
     group="multimodal",
     doc="WAV codec round-trip under the oracle: text bytes → int16 "
     "mono samples → REAL RIFF/PCM encode → stdlib decode "
@@ -1420,9 +1281,8 @@ _WAV_ENV_DUCK = f"""
     "frame count, peak/sum |amplitude|, and the 16-window integer "
     "energy envelope. The oracle derives every statistic straight "
     "from the text, so a hash match proves the codec reproduced "
-    "every sample. Both mapInPandas stages narrow (no shuffle) — the "
-    "embarrassingly-parallel decode posture; sample math is "
-    "numpy-vectorized, never a per-sample Python loop.",
+    "every sample; sample math is numpy-vectorized, never a "
+    "per-sample Python loop." + _RT_PLAN,
 )
 def multimodal_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1431,18 +1291,7 @@ def multimodal_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "multimodal_aiff_roundtrip_stats",
-    _WAV_ENV_DUCK
-    + f"""
-    SELECT doc_id,
-           CAST({WAVRT_N} AS BIGINT) AS n_frames,
-           CAST(list_aggregate(list_transform(sm, x -> abs(x)), 'max') AS BIGINT)
-             AS peak_abs,
-           CAST(list_aggregate(list_transform(sm, x -> abs(x)), 'sum') AS BIGINT)
-             AS sum_abs,
-           list_transform(env, x -> CAST(x AS BIGINT)) AS env
-    FROM e
-    ORDER BY doc_id
-    """,
+    _WAV_STATS_DUCK,
     group="multimodal",
     doc="AIFF codec round-trip under the oracle: the SAME int16 "
     "samples as the WAV round-trip, encoded into the OTHER "
@@ -1455,58 +1304,25 @@ def multimodal_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
     "hash match simultaneously proves the AIFF decoder reproduced "
     "every sample at every width AND that the two containers are "
     "interchangeable to every downstream consumer (the cross-codec "
-    "dedup property). Narrow Arrow-batched stages, no shuffle.",
+    "dedup property)." + _RT_PLAN,
 )
 def multimodal_aiff_roundtrip_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.aiff import encode_aiff
 
-    d = load_table(spark, sf_dir, "documents")
-    # ASCII gate: mirrored in _WAV_ENV_DUCK (advisor note, round 8)
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = text_media(
+        load_table(spark, sf_dir, "documents"),
+        lambda doc_id, text: encode_aiff(
+            _wav_samples(text), rate=WAVRT_RATE, bits=(16, 24, 32)[doc_id % 3]
+        ),
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(WAVRT_N, dtype=np.int64)
-        for pdf in batches:
-            outs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                if n == 0:
-                    samples = np.zeros(WAVRT_N, dtype=np.int64)
-                else:
-                    samples = arr[idx % n].astype(np.int64) * 256 - 32768
-                bits = (16, 24, 32)[int(doc_id) % 3]
-                outs.append(
-                    encode_aiff(samples, rate=WAVRT_RATE, bits=bits)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": outs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
     return sorted_result(wav_envelope_stats(media), "doc_id")
 
 
 @register(
     "multimodal_flac_roundtrip_stats",
-    _WAV_ENV_DUCK
-    + f"""
-    SELECT doc_id,
-           CAST({WAVRT_N} AS BIGINT) AS n_frames,
-           CAST(list_aggregate(list_transform(sm, x -> abs(x)), 'max') AS BIGINT)
-             AS peak_abs,
-           CAST(list_aggregate(list_transform(sm, x -> abs(x)), 'sum') AS BIGINT)
-             AS sum_abs,
-           list_transform(env, x -> CAST(x AS BIGINT)) AS env
-    FROM e
-    ORDER BY doc_id
-    """,
+    _WAV_STATS_DUCK,
     group="multimodal",
     doc="FLAC codec round-trip under the oracle: the SAME int16 "
     "samples as the WAV/AIFF round-trips, encoded through the "
@@ -1520,41 +1336,19 @@ def multimodal_aiff_roundtrip_stats(
     "hash match proves lossless compression reproduced every sample "
     "at every width AND that all three containers are "
     "interchangeable to every downstream consumer (cross-codec "
-    "dedup property). Narrow Arrow-batched stages, no shuffle.",
+    "dedup property)." + _RT_PLAN,
 )
 def multimodal_flac_roundtrip_stats(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.flac import encode_flac
 
-    d = load_table(spark, sf_dir, "documents")
-    # ASCII gate: mirrored in _WAV_ENV_DUCK (advisor note, round 8)
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
+    media = text_media(
+        load_table(spark, sf_dir, "documents"),
+        lambda doc_id, text: encode_flac(
+            _wav_samples(text), rate=WAVRT_RATE, bits=(16, 20, 24)[doc_id % 3]
+        ),
     )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(WAVRT_N, dtype=np.int64)
-        for pdf in batches:
-            outs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                if n == 0:
-                    samples = np.zeros(WAVRT_N, dtype=np.int64)
-                else:
-                    samples = arr[idx % n].astype(np.int64) * 256 - 32768
-                bits = (16, 20, 24)[int(doc_id) % 3]
-                outs.append(
-                    encode_flac(samples, rate=WAVRT_RATE, bits=bits)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": outs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
     return sorted_result(wav_envelope_stats(media), "doc_id")
 
 
@@ -1826,50 +1620,27 @@ def video_motion_stats(media: DataFrame) -> DataFrame:
 
 def _y4m_media(d: DataFrame) -> DataFrame:
     """documents -> (doc_id, payload): a REAL Y4M clip per doc —
-    VID_FRAMES frames of VID_H x VID_W luma reading the text HEAD:
-    pixel i (row-major across frames) = (byte[i] · 37) mod 256 for
-    i < n, else 0 (zero-padded; texts longer than the clip truncate).
-    Head-indexing keeps byte→pixel alignment independent of document
-    length, so near-identical texts (shared prefix, small tail edit)
-    produce near-identical clips — modular wraparound would shift
-    every pixel when lengths differ by one. The ×37 mod 256 bijection
-    spreads ASCII's narrow [32, 126] band over the full luma range
-    (unspread, every block mean collapses toward the same value and
-    the dedup signature loses all discrimination — measured 34% of
-    all pairs flagged). Colorspace cycles doc_id % 3 over
-    mono/420/444 so chroma-plane framing is exercised corpus-wide.
-    The oracle derives everything downstream of the codec straight
-    from the text."""
-    import numpy as np
-
+    VID_FRAMES frames of VID_H x VID_W luma reading the text HEAD
+    (``_spread_head``: pixel i, row-major across frames, = (byte[i] ·
+    37) mod 256 for i < n, else 0). Head-indexing keeps byte→pixel
+    alignment independent of document length, so near-identical texts
+    (shared prefix, small tail edit) produce near-identical clips —
+    modular wraparound would shift every pixel when lengths differ by
+    one. The ×37 mod 256 bijection spreads ASCII's narrow [32, 126]
+    band over the full luma range (unspread, every block mean
+    collapses toward the same value and the dedup signature loses all
+    discrimination — measured 34% of all pairs flagged). Colorspace
+    cycles doc_id % 3 over mono/420/444 so chroma-plane framing is
+    exercised corpus-wide. The oracle derives everything downstream of
+    the codec straight from the text."""
     from flink_stream_spark.operators.y4m import encode_y4m
 
-    # spread the per-doc container encode/decode across the cluster
-    # (the fixture parquet is 1-2 splits; the codec stage is the rare
-    # CPU-bound Python work — same posture as the JPEG round-trip)
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-    total = VID_FRAMES * VID_H * VID_W
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        px = _spread_head(text, VID_FRAMES * VID_H * VID_W)
+        frames = px.reshape(VID_FRAMES, VID_H, VID_W)
+        return encode_y4m(frames, colorspace=_VID_CS[doc_id % 3])
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)[:total]
-                px = np.zeros(total, dtype=np.uint8)
-                px[: len(arr)] = (arr.astype(np.int64) * 37) % 256
-                frames = px.reshape(VID_FRAMES, VID_H, VID_W)
-                vids.append(
-                    encode_y4m(frames, colorspace=_VID_CS[int(doc_id) % 3])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": vids})
-
-    return src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    return text_media(d, encode)
 
 
 _VID_FRAME_PX = VID_H * VID_W
@@ -1877,8 +1648,7 @@ _VID_STRIP_W = VID_W // VID_BLOCKS
 _VID_STRIP_PX = VID_H * _VID_STRIP_W
 
 _VID_STATS_DUCK = f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id, n,
         list_transform(generate_series(0, {VID_FRAMES - 1}),
@@ -1904,19 +1674,24 @@ _VID_STATS_DUCK = f"""
 """
 
 
-@register(
-    "multimodal_y4m_roundtrip_stats",
-    _VID_STATS_DUCK
-    + f"""
+def _vid_stats_select(frm: str) -> str:
+    """Final SELECT of the video round-trip oracles over the CTE
+    ``frm`` holding the frame means ``fm`` and block means ``bm``."""
+    return f"""
     SELECT doc_id,
            CAST({VID_FRAMES} AS BIGINT) AS n_frames,
            list_transform(fm, x -> CAST(x AS BIGINT)) AS frame_means,
            list_transform(bm, x -> CAST(x AS BIGINT)) AS block_means,
            CAST(list_aggregate(list_transform(generate_series(2, {VID_FRAMES}),
                   f -> abs(fm[f] - fm[f - 1])), 'sum') AS BIGINT) AS motion
-    FROM s
+    FROM {frm}
     ORDER BY doc_id
-    """,
+    """
+
+
+@register(
+    "multimodal_y4m_roundtrip_stats",
+    _VID_STATS_DUCK + _vid_stats_select("s"),
     group="multimodal",
     doc="Y4M video codec round-trip under the oracle: text bytes → "
     f"{VID_FRAMES} frames of {VID_H}x{VID_W} luma → REAL YUV4MPEG2 "
@@ -1926,9 +1701,8 @@ _VID_STATS_DUCK = f"""
     "per-frame integer mean luma, per-frame vertical-strip block "
     "means, and total motion Σ|mean[f]−mean[f−1]|. The oracle derives "
     "every statistic straight from the text, so a hash match proves "
-    "the codec reproduced every luma pixel for every colorspace. Both "
-    "mapInPandas stages narrow (no shuffle) — the embarrassingly-"
-    "parallel decode posture; plane math is numpy-vectorized.",
+    "the codec reproduced every luma pixel for every colorspace; "
+    "plane math is numpy-vectorized." + _RT_PLAN,
 )
 def multimodal_y4m_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -1938,8 +1712,7 @@ def multimodal_y4m_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "multimodal_avi_mjpeg_roundtrip",
     f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id,
         list_transform(generate_series(0, {VID_FRAMES * 2 - 1}),
@@ -1956,15 +1729,8 @@ def multimodal_y4m_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
                THEN v[2*(j // {VID_BLOCKS}) + 1]
                ELSE v[2*(j // {VID_BLOCKS}) + 2] END) AS bm
       FROM s)
-    SELECT doc_id,
-           CAST({VID_FRAMES} AS BIGINT) AS n_frames,
-           list_transform(fm, x -> CAST(x AS BIGINT)) AS frame_means,
-           list_transform(bm, x -> CAST(x AS BIGINT)) AS block_means,
-           CAST(list_aggregate(list_transform(generate_series(2, {VID_FRAMES}),
-                  f -> abs(fm[f] - fm[f - 1])), 'sum') AS BIGINT) AS motion
-    FROM t
-    ORDER BY doc_id
-    """,
+    """
+    + _vid_stats_select("t"),
     group="multimodal",
     doc="MJPEG-AVI video container round-trip under the oracle — the "
     "COMPRESSED video rung (operators/avi.py): text bytes plant two "
@@ -1978,40 +1744,19 @@ def multimodal_y4m_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFram
     "same frame/block/motion statistics as the Y4M round-trip. The "
     "oracle derives every value straight from the text, so a hash "
     "match proves RIFF framing + per-frame JPEG entropy decode + "
-    "index cross-check reproduced every pixel corpus-wide. Narrow "
-    "Arrow-batched stages, no shuffle.",
+    "index cross-check reproduced every pixel corpus-wide." + _RT_PLAN,
 )
 def multimodal_avi_mjpeg_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.avi import encode_avi_mjpeg
 
-    d = load_table(spark, sf_dir, "documents")
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        grid = _spread_head(text, VID_FRAMES * 2).reshape(VID_FRAMES, 1, 2)
+        frames = np.repeat(np.repeat(grid, VID_H, 1), VID_W // 2, 2)
+        return encode_avi_mjpeg(frames, fps=(30, 1))
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                vals = np.zeros(VID_FRAMES * 2, dtype=np.int64)
-                take = min(n, VID_FRAMES * 2)
-                vals[:take] = (arr[:take].astype(np.int64) * 37) % 256
-                grid = vals.reshape(VID_FRAMES, 1, 2).astype(np.uint8)
-                frames = np.repeat(np.repeat(grid, VID_H, 1), VID_W // 2, 2)
-                outs.append(encode_avi_mjpeg(frames, fps=(30, 1)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": outs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    media = text_media(load_table(spark, sf_dir, "documents"), encode)
     return sorted_result(video_motion_stats(media), "doc_id")
 
 
@@ -2104,49 +1849,25 @@ def _y4m_scene_media(d: DataFrame) -> DataFrame:
     the text itself. Colorspace cycles doc_id % 4 over
     mono/420/422/444 — one more than the round-trip query covers, so
     C422 chroma framing is exercised corpus-wide here."""
-    import numpy as np
-
     from flink_stream_spark.operators.y4m import encode_y4m
 
-    # ASCII gate: the scene-cut oracle addresses code points
-    # (ord/substr); exclude multi-byte docs identically in both
-    # engines (advisor note, round 8)
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
     seg_px = VID_H * VID_W
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                segs = []
-                for s in range(VID_FRAMES // VID_SCENE_LEN + 1):
-                    chunk = arr[s * seg_px : (s + 1) * seg_px]
-                    px = np.zeros(seg_px, dtype=np.uint8)
-                    px[: len(chunk)] = (chunk.astype(np.int64) * 37) % 256
-                    segs.append(px.reshape(VID_H, VID_W))
-                frames = np.stack(
-                    [segs[f // VID_SCENE_LEN] for f in range(VID_FRAMES)]
-                )
-                vids.append(
-                    encode_y4m(
-                        frames, colorspace=_VID_SCENE_CS[int(doc_id) % 4]
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": vids})
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        segs = [
+            _spread_head(text[s * seg_px :], seg_px).reshape(VID_H, VID_W)
+            for s in range(VID_FRAMES // VID_SCENE_LEN + 1)
+        ]
+        frames = np.stack([segs[f // VID_SCENE_LEN] for f in range(VID_FRAMES)])
+        return encode_y4m(frames, colorspace=_VID_SCENE_CS[doc_id % 4])
 
-    return src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    return text_media(d, encode)
 
 
 @register(
     "multimodal_video_scene_cuts",
     f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
+    WITH {_ASCII_P},
     s AS (
       SELECT doc_id,
         list_transform(generate_series(0, {VID_FRAMES * VID_BLOCKS - 1}),
@@ -2192,8 +1913,8 @@ def _y4m_scene_media(d: DataFrame) -> DataFrame:
     "equals ground truth; the oracle derives every block mean "
     "straight from the text with the scene mapping applied, proving "
     "decode + detection exact corpus-wide. Integer arithmetic "
-    "end-to-end; one narrow Arrow decode stage, detection is 28 "
-    "codegen'd abs-diff terms, no shuffle before the final sort.",
+    "end-to-end; detection is 28 codegen'd abs-diff terms in the "
+    "decode's stage." + _RT_PLAN,
 )
 def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = video_motion_stats(
@@ -2217,14 +1938,13 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in range(1, VID_FRAMES)
         ]
     )
-    return (
+    cuts = (
         stats.filter(F.col("n_frames") > 0)
         .select("doc_id", F.explode(deltas).alias("c"))
         .select("doc_id", F.col("c.frame_idx"), F.col("c.delta"))
         .filter(F.col("delta") >= VID_CUT_THRESH)
-        .repartition("doc_id", "frame_idx")  # sorted_result (see sortout.py)
-        .orderBy("doc_id", "frame_idx")
     )
+    return sorted_result(cuts, "doc_id", "frame_idx")
 
 
 # --- audio spectral fingerprinting (constellation hashing) ----------------
@@ -2279,36 +1999,16 @@ def _wavfp_media(d: DataFrame) -> DataFrame:
     byte[i]*256 - 32768 for i < min(len, FPN), zero-padded to FPN —
     zero-PADDED (not cycled like _wav_media) so that two documents
     sharing a byte run share ALIGNED frames regardless of their total
-    lengths, which is what fingerprint matching needs.
-
-    ASCII-only gate, mirrored in the oracle (LENGTH = octet_length):
-    the Spark side fingerprints UTF-8 BYTES while the SQL oracle can
-    only address CODE POINTS (ord/substr), so the two engines agree
-    exactly on docs where chars == bytes and would silently diverge on
-    any other. Excluding multi-byte docs identically in both engines
-    turns a future non-ASCII fixture into a visible row-set change
-    instead of a value-hash mismatch (advisor note, round 7)."""
-    import numpy as np
-
+    lengths, which is what fingerprint matching needs."""
     from flink_stream_spark.operators.wav import encode_wav
 
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        head = text[:FPN]
+        samples = np.zeros(FPN, dtype=np.int64)
+        samples[: len(head)] = head.astype(np.int64) * 256 - 32768
+        return encode_wav(samples, rate=WAVRT_RATE, bits=16)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)[:FPN]
-                samples = np.zeros(FPN, dtype=np.int64)
-                samples[: len(arr)] = arr.astype(np.int64) * 256 - 32768
-                wavs.append(encode_wav(samples, rate=WAVRT_RATE, bits=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": wavs})
-
-    return src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    return text_media(d, encode)
 
 
 def audio_fingerprints(media: DataFrame) -> DataFrame:
@@ -2364,9 +2064,7 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
 @register(
     "multimodal_audio_fingerprint_pairs",
     f"""
-    WITH p AS (SELECT doc_id, text, LEAST(LENGTH(text), {FPN}) AS n
-               FROM documents
-               WHERE LENGTH(text) = strlen(text)),
+    WITH {_ASCII_P},
     sm AS (
       SELECT doc_id,
              i // {FP_NFFT} AS t, i % {FP_NFFT} AS nn,
@@ -2489,24 +2187,7 @@ def multimodal_audio_fingerprint_pairs(
 
 @register(
     "multimodal_jpeg_progressive_roundtrip",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0
-               ELSE ord(substr(text, (i % n) + 1, 1)) END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_CYCLIC_DUCK,
     group="multimodal",
     doc="PROGRESSIVE-JPEG (SOF2) codec round-trip under the oracle: the "
     "same constant-block grid as the baseline round-trip, encoded by "
@@ -2521,94 +2202,21 @@ def multimodal_audio_fingerprint_pairs(
     "grid straight from the text — a hash match proves the "
     "progressive decode reproduced every luma pixel, and the shared "
     "oracle with multimodal_jpeg_roundtrip_dhash pins the cross-coder "
-    "equality corpus-wide. Both mapInPandas stages narrow (no "
-    "shuffle) — the embarrassingly-parallel decode posture.",
+    "equality corpus-wide." + _RT_PLAN,
 )
 def multimodal_jpeg_progressive_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.jpeg import encode_jpeg_progressive
 
-    d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(par, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gidx = np.arange(DHASH_ROWS * 9, dtype=np.int64)
-
-        def cplane(arr, n, gh, gw, ch, cw, shift, fill):
-            cg = (
-                np.full(gh * gw, fill, dtype=np.uint8)
-                if n == 0
-                else arr[(np.arange(gh * gw, dtype=np.int64) + shift) % n]
-            ).reshape(gh, gw)
-            return np.repeat(np.repeat(cg, 8, 0), 8, 1)[:ch, :cw]
-
-        for pdf in batches:
-            jpgs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                grid = (
-                    np.zeros(DHASH_ROWS * 9, dtype=np.uint8)
-                    if n == 0
-                    else arr[gidx % n]
-                ).reshape(DHASH_ROWS, 9)
-                y = np.repeat(np.repeat(grid, 8, 0), 8, 1)  # 64x72
-                layout = JPGRT_LAYOUTS[int(doc_id) % 4]
-                rst = 2 if int(doc_id) % 2 else 0
-                if layout is None:
-                    planes = [y]
-                    sampling = None
-                else:
-                    (sh, sv) = layout[0]
-                    cw, ch = 72 // sh, 64 // sv
-                    gh, gw = -(-ch // 8), -(-cw // 8)
-                    planes = [
-                        y,
-                        cplane(arr, n, gh, gw, ch, cw, 3, 128),
-                        cplane(arr, n, gh, gw, ch, cw, 11, 64),
-                    ]
-                    sampling = layout
-                jpgs.append(
-                    encode_jpeg_progressive(
-                        planes, sampling, quality=100, restart_interval=rst
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": jpgs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    docs = load_table(spark, sf_dir, "documents")
+    media = _jpeg_rt_media(docs, encode_jpeg_progressive)
     return sorted_result(dhash_bands(media), "doc_id")
 
 
 @register(
     "multimodal_tiff_roundtrip_dhash",
-    f"""
-    WITH p AS (SELECT doc_id, text, LENGTH(text) AS n FROM documents
-               WHERE LENGTH(text) = octet_length(CAST(text AS BLOB))),
-    s AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS * 9 - 1}),
-          i -> CASE WHEN n = 0 THEN 0
-               ELSE ord(substr(text, (i % n) + 1, 1)) END) AS px
-      FROM p),
-    b AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, {DHASH_ROWS - 1}),
-          r -> CAST(list_aggregate(list_transform(generate_series(0, 7),
-                 c -> CASE WHEN px[r*9 + c + 1] < px[r*9 + c + 2]
-                      THEN 1 << c ELSE 0 END), 'sum') AS INTEGER)) AS bands
-      FROM s)
-    SELECT doc_id, bands FROM b ORDER BY doc_id
-    """,
+    _DHASH_CYCLIC_DUCK,
     group="multimodal",
     doc="TIFF codec round-trip under the oracle: the same 8x9 "
     "grayscale grid as the PNG/GIF/BMP round-trips (same pixels, "
@@ -2621,47 +2229,19 @@ def multimodal_jpeg_progressive_roundtrip(
     "The oracle derives the grid straight from the text, so a hash "
     "match proves the decoder reproduced every pixel in every "
     "variant. Scanned-document corpora ship TIFF — this closes the "
-    "fifth image container for near-dup dedup. Both mapInPandas "
-    "stages narrow (no shuffle), the embarrassingly-parallel decode "
-    "posture.",
+    "fifth image container for near-dup dedup." + _RT_PLAN,
 )
 def multimodal_tiff_roundtrip_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from flink_stream_spark.operators.tiff import encode_tiff_gray
 
-    d = load_table(spark, sf_dir, "documents")
-    # ASCII gate: the oracle addresses code points (ord/substr);
-    # exclude multi-byte docs identically in both engines
-    src = (
-        d.filter(F.length("text") == F.octet_length("text"))
-        .repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-        .select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
+    def encode(doc_id: int, text: np.ndarray) -> bytes:
+        return encode_tiff_gray(
+            _cycled(text, DHASH_ROWS * 9).reshape(DHASH_ROWS, 9),
+            big_endian=bool(doc_id % 2),
+            packbits=bool((doc_id // 2) % 2),
+            white_is_zero=bool((doc_id // 4) % 2),
+            rows_per_strip=4,
+        )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = np.arange(DHASH_ROWS * 9, dtype=np.int64)
-        for pdf in batches:
-            tiffs = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                n = len(arr)
-                pix = (
-                    np.zeros((DHASH_ROWS, 9), dtype=np.uint8)
-                    if n == 0
-                    else arr[idx % n].reshape(DHASH_ROWS, 9)
-                )
-                did = int(doc_id)
-                tiffs.append(
-                    encode_tiff_gray(
-                        pix,
-                        big_endian=bool(did % 2),
-                        packbits=bool((did // 2) % 2),
-                        white_is_zero=bool((did // 4) % 2),
-                        rows_per_strip=4,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": tiffs})
-
-    media = src.mapInPandas(_encode, "doc_id bigint, payload binary")
+    media = text_media(load_table(spark, sf_dir, "documents"), encode)
     return sorted_result(dhash_bands(media), "doc_id")

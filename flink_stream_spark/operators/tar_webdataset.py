@@ -227,7 +227,7 @@ def webdataset_scan(spark: SparkSession, shard_dir: str) -> DataFrame:
     """
     SELECT doc_id,
            lang,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
+           CAST(strlen(text) AS BIGINT) AS n_bytes,
            md5(text) AS text_md5
     FROM documents
     ORDER BY doc_id

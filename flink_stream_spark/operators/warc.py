@@ -394,7 +394,7 @@ def warc_scan(spark: SparkSession, warc_dir: str) -> DataFrame:
                     + to_seconds(doc_id), '%Y-%m-%dT%H:%M:%SZ')
              AS warc_date,
            lang,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT)
+           CAST(strlen(text) AS BIGINT)
              AS content_length,
            text
     FROM documents
@@ -429,7 +429,7 @@ def scan_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     SELECT lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(octet_length(CAST(text AS BLOB))) AS BIGINT)
+           CAST(SUM(strlen(text)) AS BIGINT)
              AS total_bytes,
            CAST(MIN(doc_id) AS BIGINT) AS min_doc,
            CAST(MAX(doc_id) AS BIGINT) AS max_doc

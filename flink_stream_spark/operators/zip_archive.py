@@ -338,7 +338,7 @@ def zip_scan(spark: SparkSession, zip_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(CASE WHEN doc_id % 2 = 1 THEN 8 ELSE 0 END AS INTEGER)
              AS method,
-           CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
+           CAST(strlen(text) AS BIGINT) AS n_bytes,
            md5(text) AS text_md5
     FROM documents
     ORDER BY doc_id

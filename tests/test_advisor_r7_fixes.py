@@ -1,8 +1,9 @@
 """Round-7 advisor findings, each pinned by a test:
 
-1. multimodal_audio_fingerprint_pairs must exclude non-ASCII docs in
-   BOTH engines (the Spark side fingerprints UTF-8 bytes, the SQL
-   oracle addresses code points — they only agree where chars==bytes).
+1. multimodal_audio_fingerprint_pairs (like every codec round-trip
+   built on text_media) must exclude non-ASCII docs in BOTH engines
+   (the Spark side fingerprints UTF-8 bytes, the SQL oracle addresses
+   code points — they only agree where chars==bytes).
 2. parse_image_header's TIFF branch must not misread an offset as a
    dimension when a Width/Height tag has count > 1.
 3. JPEG decode must accept T.81 B.1.1.2 fill bytes (extra 0xFF)
@@ -23,13 +24,16 @@ from flink_stream_spark.operators.tiff import packbits_decode
 
 
 def test_wavfp_media_excludes_non_ascii_docs(spark):
-    from flink_stream_spark.operators.multimodal import _wavfp_media
+    """text_media is the one source of all codec round-trips
+    (_wavfp_media among them), so its gate is asserted once here."""
+    from flink_stream_spark.operators.multimodal import text_media
 
     docs = spark.createDataFrame(
         [(1, "plain ascii text " * 20), (2, "café au lait " * 30)],
         "doc_id bigint, text string",
     )
-    ids = {r["doc_id"] for r in _wavfp_media(docs).select("doc_id").collect()}
+    media = text_media(docs, lambda doc_id, text: text.tobytes())
+    ids = {r["doc_id"] for r in media.select("doc_id").collect()}
     assert ids == {1}, (
         "multi-byte docs must be filtered (chars != bytes breaks "
         "Spark/oracle parity); got " + repr(ids)

@@ -371,3 +371,44 @@ def test_dsir_no_cartesian_and_broadcast_lm(spark, sf_oracle):
     assert "CartesianProduct" not in plan
     # the <= 2x1024-row bucket-LM table broadcasts back to doc features
     assert "BroadcastHashJoin" in plan
+
+
+_ROUNDTRIPS = [
+    "multimodal_png_roundtrip_dhash",
+    "multimodal_gif_roundtrip_dhash",
+    "multimodal_bmp_roundtrip_dhash",
+    "multimodal_jpeg_roundtrip_dhash",
+    "multimodal_exif_orientation_dhash",
+    "multimodal_jpeg_progressive_roundtrip",
+    "multimodal_tiff_roundtrip_dhash",
+    "multimodal_wav_roundtrip_stats",
+    "multimodal_aiff_roundtrip_stats",
+    "multimodal_flac_roundtrip_stats",
+    "multimodal_y4m_roundtrip_stats",
+    "multimodal_avi_mjpeg_roundtrip",
+    "multimodal_video_scene_cuts",
+]
+
+
+@pytest.mark.parametrize("name", _ROUNDTRIPS)
+def test_codec_roundtrip_plan_shape(spark, sf_oracle, name):
+    """The codec round-trips' plan, as text_media and sorted_result
+    document it: the encode and decode MapInPandas run back to back
+    above text_media's doc_id hash spread, and the ORDER BY's range
+    exchange reads sorted_result's hash exchange directly, so the
+    range sampler never re-runs the Python stages."""
+    import flink_stream_spark.operators.multimodal  # noqa: F401
+
+    df = REGISTRY[name].build(spark, sf_oracle)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    ops = [line.lstrip(" +-:") for line in plan.splitlines()]
+    py = [i for i, op in enumerate(ops) if op.startswith("MapInPandas")]
+    assert len(py) == 2 and py[1] == py[0] + 1, plan  # decode on encode
+    assert any(
+        op.startswith("Exchange hashpartitioning(doc_id#") for op in ops[py[1] + 1 :]
+    ), f"no doc_id spread below the encode: {plan}"
+    rng = [i for i, op in enumerate(ops) if op.startswith("Exchange rangepartitioning")]
+    assert len(rng) == 1 and rng[0] < py[0], plan
+    assert ops[rng[0] + 1].startswith("Exchange hashpartitioning("), plan
