@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _MAGIC = b"Obj\x01"
 _SYNC_LEN = 16
@@ -414,5 +415,4 @@ def avro_scan(spark: SparkSession, avro_dir: str, n_splits_per_file: int = 4) ->
 def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(_work_dir(spark, sf_dir), "ocf")
     write_avro_files(load_table(spark, sf_dir, "documents"), out_dir)
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return avro_scan(spark, out_dir).repartition("doc_id").orderBy("doc_id")
+    return sorted_result(avro_scan(spark, out_dir), "doc_id")

@@ -34,10 +34,10 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 # fixture blocklist: two-word phrases over the corpus vocabulary
 # (some frequent, some rare, some absent) — all border-free so the
@@ -181,8 +181,7 @@ def filter_blocklist_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    # result-sized exchange before the sort (see operators/sortout.py)
     return src.mapInPandas(
         _scan,
         "doc_id bigint, n_hits bigint, n_phrases bigint, blocked boolean",
-    ).repartition("doc_id").orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")

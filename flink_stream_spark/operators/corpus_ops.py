@@ -36,6 +36,7 @@ from flink_stream_spark.operators.dedup import (
 )
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.sampling import hash_bucket, _bucket_duck
+from flink_stream_spark.operators.sortout import sorted_result
 
 BENCH_SOURCE = "src0"  # stands in for the held-out eval set
 NGRAM = 5  # decontamination n-gram size
@@ -721,8 +722,7 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"(off + n_tokens - 1) div {PACK_WINDOW}")
             > F.expr(f"off div {PACK_WINDOW}")
         ).alias("spans_boundary"),
-        # result-sized exchange before the sort (see operators/sortout.py)
-    ).repartition("doc_id").orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 LINE_TOKENS = 8  # pseudo-line width (fixture text has no newlines)
@@ -1068,10 +1068,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_tokens_raw"), F.col("n_tokens_bpe")
             ).alias("compression"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        # (compound key — plain doc_id is elided, see text.py winnowing)
-        .repartition("doc_id", "n_tokens_raw")
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.exactmath import round6_ratio, round6_ratio_sql
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 from flink_stream_spark.operators.text import tok_hash_duck, _tok_hash_spark
 
 # MinHash parameters (fixed-seed permutations j=1..K over a Mersenne
@@ -428,10 +429,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
         .filter(jac >= 0.5)
         .select("doc_a", "doc_b", round6_ratio(shared, union).alias("jaccard"))
-        # no pre-sort exchange here: the verify join's output is already
-        # hash-partitioned on (doc_a, doc_b)-compatible keys, so Catalyst
-        # elides a repartition on those keys (round-9 after-plan showed
-        # the inserted node missing — it was a documented no-op)
+        # plain sort: a pre-sort exchange was never measured to pay here
         .orderBy("doc_a", "doc_b")
     )
 
@@ -817,20 +815,10 @@ def dedup_jaccard_prefix_filter(
             F.col("union_n").cast("bigint").alias("union_n"),
             round6_ratio(F.col("shared"), F.col("union_n")).alias("jaccard"),
         )
-        # materialize the RESULT rows in a hash exchange before the
-        # output sort (round-9 optimization): a global sort's range
-        # partitioner runs a sampling job over its child, and here the
-        # child is the whole verify+expansion pipeline — the two
-        # heaviest stages of the profiled run were that pipeline
-        # executed TWICE (sample pass then shuffle-write pass,
-        # 29.2 s + 13.5 s task time at sf0.1). With the result-sized
-        # exchange in between, the sample re-reads kilobytes of
-        # shuffle files instead of re-running the verify. Output rows
-        # are pair verdicts (tiny vs the work that produces them), so
-        # the extra exchange is result-sized at every scale; AQE
-        # coalesces it. Measured sf0.1: 3.75 -> 2.84 s min-of-5.
-        .repartition("doc_a", "doc_b")
-        .orderBy("doc_a", "doc_b")
+        # without the result-sized exchange the range sampler re-ran
+        # the whole verify+expansion pipeline (29.2 s + 13.5 s task
+        # time at sf0.1); measured sf0.1: 3.75 -> 2.84 s min-of-5
+        .transform(sorted_result, "doc_a", "doc_b")
     )
 
 
@@ -1334,17 +1322,10 @@ def dedup_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("dup_tokens", F.lit(0)), F.col("n_tokens")
             ).alias("dup_frac"),
         )
-        # result-sized exchange before the sort (operators/sortout.py).
-        # Round 9 reverted this site on sf0.1 noise; the round-10 sf1
-        # stage profile shows the range-sort sampling re-running the
-        # whole explode+hash+window final stage (31 s task time,
-        # shuffleWrite=0) — the exchange carries one row per doc.
-        # Two-column key on purpose: the pipeline is already
-        # hash-partitioned on doc_id, so a plain repartition("doc_id")
-        # is elided by Catalyst and nothing materializes (the
-        # dedup_minhash_lsh_pairs round-9 lesson).
-        .repartition("doc_id", "n_tokens")
-        .orderBy("doc_id")
+        # without the result-sized exchange (one row per doc) the range
+        # sampler re-ran the whole explode+hash+window final stage
+        # (31 s task time, shuffleWrite=0, round-10 sf1 stage profile)
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -1549,9 +1530,9 @@ def dedup_exact_substr_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = d.repartition(par, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ts")
     )
-    # result-sized exchange before the sort (see operators/sortout.py):
-    # without it the range sampler re-ran the Arrow suffix-array stage
-    return suffix_array_span_stats(toked).repartition("doc_id").orderBy("doc_id")
+    # without the result-sized exchange the range sampler re-ran the
+    # Arrow suffix-array stage
+    return sorted_result(suffix_array_span_stats(toked), "doc_id")
 
 
 # Incremental new-batch dedup: the index/incoming split is by source
@@ -1647,10 +1628,7 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_index_candidates"),
             (F.coalesce("n_index_candidates", F.lit(0)) > 0).alias("near_dup"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        # (compound key — plain doc_id is elided, see text.py winnowing)
-        .repartition("doc_id", "exact_dup")
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -1806,8 +1784,5 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         inc.join(confirmed, "doc_id", "left")
         .select("doc_id", F.coalesce("__dup", F.lit(False)).alias("exact_dup"))
-        # result-sized exchange before the sort (see operators/sortout.py)
-        # (compound key — plain doc_id is elided, see text.py winnowing)
-        .repartition("doc_id", "exact_dup")
-        .orderBy("doc_id")
+        .transform(sorted_result, "doc_id")
     )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _WORK = "/tmp/flink_stream_spark/formats"
 
@@ -114,8 +115,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .csv(path)
     )
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return back.repartition("doc_id").orderBy("doc_id")
+    return sorted_result(back, "doc_id")
 
 
 @register(
@@ -193,7 +193,5 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_ship",
             F.col("n_orders").cast("bigint"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("l_returnflag", "l_linestatus")
         .orderBy("l_returnflag", "l_linestatus")
     )

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 # subtrees whose character data is never content
 _DROP_TAGS = {"script", "style", "noscript", "template", "svg", "head"}
@@ -303,8 +304,7 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_content",
         "n_boiler",
         F.md5(F.encode("main_text", "utf-8")).alias("text_md5"),
-        # result-sized exchange before the sort (see operators/sortout.py)
-    ).repartition("doc_id").orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")
 
 
 @register(
@@ -386,5 +386,4 @@ def pipeline_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("main_text").alias("content_chars"),
         "n_boiler",
         F.md5(F.encode("main_text", "utf-8")).alias("text_md5"),
-        # result-sized exchange before the sort (see operators/sortout.py)
-    ).repartition("doc_id").orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")

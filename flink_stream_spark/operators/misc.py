@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import TABLES, load_table, load_tables
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 
 @register(
@@ -669,9 +670,7 @@ def agg_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("exact_cnt").cast("bigint").alias("exact_cnt"),
             F.col("cms_est").cast("bigint").alias("cms_est"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("exact_cnt", "custkey")
-        .orderBy(F.desc("exact_cnt"), F.asc("custkey"))
+        .transform(sorted_result, "exact_cnt", "custkey", ascending=[False, True])
     )
 
 
@@ -995,8 +994,6 @@ def agg_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_distinct",
             F.col("exact_distinct").cast("bigint"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("group_key")
         .orderBy("group_key")
     )
 

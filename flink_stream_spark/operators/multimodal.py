@@ -755,6 +755,7 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
             dhash_hamming(F.col("ba"), F.col("bb")).alias("hamming"),
         )
         .filter(F.col("hamming") <= DHASH_HAMMING_MAX)
+        # plain sort: a pre-sort exchange was never measured to pay here
         .orderBy("doc_a", "doc_b")
     )
 

@@ -51,10 +51,10 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _LINES_PER_PAGE = 40
 
@@ -631,9 +631,8 @@ def multimodal_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    # result-sized exchange before the sort (see operators/sortout.py)
     return src.mapInPandas(
         _roundtrip,
         "doc_id bigint, n_pages bigint, n_objects bigint, "
         "n_lines bigint, text_md5 string",
-    ).repartition("doc_id").orderBy("doc_id")
+    ).transform(sorted_result, "doc_id")

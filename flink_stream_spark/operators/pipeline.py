@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.dedup import (
-    BANDS,
     K_PERM,
     P31,
     ROWS_PER_BAND,
@@ -131,8 +130,6 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("bigint").alias("chars"),
             F.size(F.split("text", " ")).cast("bigint").alias("tokens"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("doc_id")
         .orderBy("doc_id")
     )
 

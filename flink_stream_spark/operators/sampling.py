@@ -399,8 +399,6 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(1000000.0)
             ).alias("avg_log_ratio"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("doc_id")
         .orderBy("doc_id")
     )
 

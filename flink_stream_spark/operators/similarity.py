@@ -24,6 +24,7 @@ from pyspark.sql.window import Window as W
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.dedup import _dot_expr, _norm_expr
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 N_QUERIES = 5  # query set: vec_id < 5
 TOP_K = 10
@@ -724,8 +725,6 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("centroid"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("label", "dim")
         .orderBy("label", "dim")
     )
 
@@ -1188,10 +1187,7 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         assign(n, c1)
         .select("vec_id", F.col("cent_id").cast("bigint").alias("cluster"))
-        # result-sized exchange before the sort (see operators/sortout.py)
-        # (compound key — plain vec_id is elided, see text.py winnowing)
-        .repartition("vec_id", "cluster")
-        .orderBy("vec_id")
+        .transform(sorted_result, "vec_id")
     )
 
 
@@ -1560,9 +1556,7 @@ def dedup_semdedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_dup_lower",
             (F.col("n_dup_lower") == 0).alias("keep"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("vec_id")
-        .orderBy("vec_id")
+        .transform(sorted_result, "vec_id")
     )
 
 
@@ -1662,7 +1656,5 @@ def embedding_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.array(*[f"p{j}" for j in range(JL_K)]).alias("proj"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("vec_id")
         .orderBy("vec_id")
     )

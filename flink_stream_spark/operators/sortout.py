@@ -1,34 +1,40 @@
 """Output-sort helper: materialize result rows before the global sort.
 
-Round-9 optimization (guide §1.1 empirical loop + §2.4). Every
-declared query ends in an ORDER BY so the driver/oracle comparison is
-deterministic. Spark executes a global sort as a range exchange, and
-the range partitioner first runs a SAMPLING job over the exchange's
-child to pick the split points — re-executing the entire child
-pipeline above the last materialized shuffle. Stage profiling
-(tools/stage_profile.py) showed the two heaviest stages of most
-headline queries were the SAME final pipeline run twice: once with
-shuffleWrite=0 (the sample pass) and once for real. For the codec
-round-trips the doubled work includes the whole per-doc Python
-encode+decode (multimodal_jpeg_progressive_roundtrip measured
-7.65 -> 3.68 s min-of-5 at sf0.1 from this change alone); for the
-text/dedup family it includes the md5 shingle passes, the Arrow
-suffix-array stage, or the verify joins.
+Every declared query ends in an ORDER BY so the driver/oracle
+comparison is deterministic. Spark executes a global sort as a range
+exchange, and the range partitioner first runs a SAMPLING job over the
+exchange's child to pick the split points — re-executing the entire
+child pipeline above the last materialized shuffle. Stage profiling
+showed the two heaviest stages of most headline queries were the SAME
+final pipeline run twice: once with shuffleWrite=0 (the sample pass)
+and once for real. For the codec round-trips the doubled work includes
+the whole per-doc Python encode+decode (multimodal_jpeg_progressive_
+roundtrip measured 7.65 -> 3.68 s min-of-5 at sf0.1 from this change
+alone); for the text/dedup family it includes the md5 shingle passes,
+the Arrow suffix-array stage, or the verify joins.
 
-``sorted_result(df, *keys)`` inserts a result-sized hash exchange
-between the pipeline and the sort, so the sampling job re-reads a few
-KB of shuffle files instead of re-running the pipeline. Scale
-posture: the extra exchange carries exactly the query RESULT (already
-tiny relative to the work that produced it — aggregates, pair
-verdicts, per-doc rows); AQE coalesces it to result-proportional
-partitions at any scale. The trade is one result-sized shuffle for a
-full re-execution of the final stage — correct whenever the final
-stage does more than scan an exchange, which profiling confirmed per
-call site (sites where it did NOT pay were left alone; see
-OPTIMIZATION_r09.md).
+``sorted_result(df, *cols)`` puts a result-sized hash exchange between
+the pipeline and the sort, so the sampling job re-reads a few KB of
+shuffle files instead of re-running the pipeline. The exchange carries
+exactly the query RESULT (already tiny relative to the work that
+produced it — aggregates, pair verdicts, per-doc rows); AQE coalesces
+it to result-proportional partitions at any scale.
 
-Row-identical to ``df.orderBy(*keys)``: a hash repartition neither
-adds, drops, nor rewrites rows, and the subsequent global sort fully
+Why a rebalance and not ``repartition(*cols)``: the physical rule
+``EnsureRequirements`` removes a user ``REPARTITION_BY_COL`` (or
+``REPARTITION_BY_NUM``) exchange whose hash partitioning is
+semantically equal to its child's output partitioning. With
+``shuffle.partitions == defaultParallelism`` (``get_spark``), every
+``repartition(key)`` over a child already hash-partitioned on ``key``
+— a ``groupBy(key)``, a join on ``key`` — silently disappears, and the
+sampler re-runs the final stage anyway. The ``rebalance`` hint plans a
+``REBALANCE_PARTITIONS_BY_COL`` exchange, which that rule never
+touches, so the exchange exists whatever the child's partitioning.
+``tests/test_plans.py`` asserts the shape for every query that uses
+the helper, and lints the registry for inline pre-sort repartitions.
+
+Row-identical to ``df.orderBy(*cols, ascending=...)``: a hash exchange
+neither adds, drops, nor rewrites rows, and the global sort fully
 determines the output order the oracle hash sees.
 """
 
@@ -37,9 +43,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def sorted_result(df: DataFrame, *keys: str) -> DataFrame:
-    """``df.orderBy(*keys)`` with a result-sized hash exchange in
-    between so the range partitioner's sampling job does not re-run
-    the query's final stage. Plain ascending string keys only — the
-    handful of desc/expression sorts keep their explicit form."""
-    return df.repartition(*keys).orderBy(*keys)
+def sorted_result(
+    df: DataFrame, *cols: str, ascending: bool | list[bool] = True
+) -> DataFrame:
+    """``df.orderBy(*cols, ascending=ascending)`` over a result-sized
+    hash exchange on ``cols`` that the planner cannot elide, so the
+    range partitioner's sampling job does not re-run the query's final
+    stage. ``cols`` are column names (what the rebalance hint takes);
+    the direction goes in ``ascending``, a bool or one per column, as
+    with ``orderBy``."""
+    return df.hint("rebalance", *cols).orderBy(*cols, ascending=ascending)

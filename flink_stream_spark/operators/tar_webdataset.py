@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _BLOCK = 512
 _MAGIC = b"ustar\x0000"  # POSIX magic "ustar\0" + version "00"
@@ -249,5 +250,4 @@ def scan_tar_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_webdataset_shards(
         load_table(spark, sf_dir, "documents"), out_dir
     )
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return webdataset_scan(spark, out_dir).repartition("doc_id").orderBy("doc_id")
+    return sorted_result(webdataset_scan(spark, out_dir), "doc_id")

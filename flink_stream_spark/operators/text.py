@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 # tiny per-language function-word lists for the n-gram/stopword
 # language-ID heuristic (public common-word lists)
@@ -341,12 +342,9 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_fingerprints"),
             "fingerprint_hash",
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        # (compound key: the child is already doc_id-partitioned, so a
-        # plain doc_id repartition is elided and the range sampler
-        # re-ran the heavy final stage — round-10 sf1 stage profile)
-        .repartition("doc_id", "n_grams")
-        .orderBy("doc_id")
+        # without the result-sized exchange the range sampler re-ran
+        # the heavy final stage (round-10 sf1 stage profile)
+        .transform(sorted_result, "doc_id")
     )
 
 
@@ -421,6 +419,6 @@ def text_normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("nfc").cast("bigint").alias("nfc_len"),
         (F.length("raw") - F.length("nfc")).cast("bigint").alias("composed"),
         F.md5(F.encode("nfc", "utf-8")).alias("nfc_md5"),
-        # result-sized exchange before the sort (see operators/sortout.py):
-        # without it the range sampler re-ran the Python NFC stage
-    ).repartition("doc_id").orderBy("doc_id")
+        # without the result-sized exchange the range sampler re-ran
+        # the Python NFC stage
+    ).transform(sorted_result, "doc_id")

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window as W
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.exactmath import round6_ratio, round6_ratio_sql
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 
 @register(
@@ -94,9 +95,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("s", 6).cast("double").alias("tfidf"),
             F.col("rank").cast("int").alias("rank"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("doc_id", "rank")
-        .orderBy("doc_id", "rank")
+        .transform(sorted_result, "doc_id", "rank")
     )
 
 

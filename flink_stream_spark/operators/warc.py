@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 CRLF = b"\r\n"
 _WARC_VERSION = b"WARC/1.0"
@@ -420,8 +421,7 @@ def warc_scan(spark: SparkSession, warc_dir: str) -> DataFrame:
 )
 def scan_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     warc_dir = _write_warc_fixture(spark, sf_dir)
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return warc_scan(spark, warc_dir).repartition("doc_id").orderBy("doc_id")
+    return sorted_result(warc_scan(spark, warc_dir), "doc_id")
 
 
 @register(
@@ -460,7 +460,5 @@ def scan_warc_wet_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
         )
-        # result-sized exchange before the sort (see operators/sortout.py)
-        .repartition("lang")
         .orderBy("lang")
     )

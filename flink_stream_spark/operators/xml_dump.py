@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _PAGES_PER_STREAM = 25
 
@@ -294,5 +295,4 @@ def scan_xml_dump(spark: SparkSession, dump_dir: str) -> DataFrame:
 def scan_xml_dump_multistream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(_work_dir(spark, sf_dir), "dump")
     write_xml_dump(load_table(spark, sf_dir, "documents"), out_dir)
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return scan_xml_dump(spark, out_dir).repartition("doc_id").orderBy("doc_id")
+    return sorted_result(scan_xml_dump(spark, out_dir), "doc_id")

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.registry import register
+from flink_stream_spark.operators.sortout import sorted_result
 
 _SIG_LOCAL = 0x04034B50
 _SIG_CENTRAL = 0x02014B50
@@ -359,5 +360,4 @@ def zip_scan(spark: SparkSession, zip_dir: str) -> DataFrame:
 def scan_zip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(_work_dir(spark, sf_dir), "roundtrip")
     write_zip_archives(load_table(spark, sf_dir, "documents"), out_dir)
-    # result-sized exchange before the sort (see operators/sortout.py)
-    return zip_scan(spark, out_dir).repartition("doc_id").orderBy("doc_id")
+    return sorted_result(zip_scan(spark, out_dir), "doc_id")

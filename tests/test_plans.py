@@ -315,13 +315,31 @@ _PYTHON_NODES = (
 )
 
 
+def _presort_inputs(df) -> list[str]:
+    """The operator directly under each ``Exchange rangepartitioning``
+    of ``df``'s physical plan (``explain("simple")``: an exchange is
+    unary, so its child is the next line)."""
+    plan = df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    ops = [line.lstrip(" +-:") for line in plan.splitlines()]
+    return [
+        ops[i + 1]
+        for i, op in enumerate(ops[:-1])
+        if op.startswith("Exchange rangepartitioning")
+    ]
+
+
 def test_registry_wide_plan_lint(spark, sf_oracle):
     """Scale-posture lint over the FULL registry: no CartesianProduct
     in any of the ~170 query plans (a cross join that stops being a
-    broadcast silently becomes O(n²) at scale), and no Python
-    evaluation nodes outside the declared UDF-surface queries (a
-    row-at-a-time UDF sneaking into a hot path is a 10-100× regression
-    that no result-correctness test would ever catch)."""
+    broadcast silently becomes O(n²) at scale), no Python evaluation
+    nodes outside the declared UDF-surface queries (a row-at-a-time
+    UDF sneaking into a hot path is a 10-100× regression that no
+    result-correctness test would ever catch), and no user
+    repartition directly under a range sort: a pre-sort exchange goes
+    through ``sorted_result``, whose exchange the planner cannot
+    elide, never an inline ``repartition(...).orderBy(...)``."""
     import __spark_entry__  # noqa: F401  (populates the registry)
 
     bad = []
@@ -336,7 +354,84 @@ def test_registry_wide_plan_lint(spark, sf_oracle):
             for node in _PYTHON_NODES:
                 if node in plan:
                     bad.append((name, node))
+        for op in _presort_inputs(df):
+            if "REPARTITION_BY_COL" in op or "REPARTITION_BY_NUM" in op:
+                bad.append((name, "inline pre-sort repartition"))
     assert not bad, f"plan lint violations: {bad}"
+
+
+def test_sorted_result_keeps_exchange_over_partitioned_child(spark):
+    """The elision case: the child is already hash-partitioned on the
+    sort key, so ``EnsureRequirements`` would drop a
+    ``repartition("k")`` there; ``sorted_result``'s exchange stays."""
+    from pyspark.sql import functions as F
+
+    from flink_stream_spark.operators.sortout import sorted_result
+
+    child = (
+        spark.range(1000)
+        .groupBy((F.col("id") % 7).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    inputs = _presort_inputs(sorted_result(child, "k"))
+    assert len(inputs) == 1 and inputs[0].startswith("Exchange "), inputs
+
+
+# every registered query whose output sort goes through sorted_result
+_SORTED_RESULT = [
+    "agg_heavy_hitters_cms",
+    "corpus_pack_sequences",
+    "dedup_exact_substr_sa",
+    "dedup_exact_substr_spans",
+    "dedup_incremental_bloom",
+    "dedup_incremental_new_batch",
+    "dedup_jaccard_prefix_filter",
+    "dedup_semdedup_cluster",
+    "embedding_kmeans_assign",
+    "filter_blocklist_phrases",
+    "multimodal_aiff_roundtrip_stats",
+    "multimodal_avi_mjpeg_roundtrip",
+    "multimodal_bmp_roundtrip_dhash",
+    "multimodal_exif_orientation_dhash",
+    "multimodal_feature_extract",
+    "multimodal_flac_roundtrip_stats",
+    "multimodal_gif_roundtrip_dhash",
+    "multimodal_jpeg_progressive_roundtrip",
+    "multimodal_jpeg_roundtrip_dhash",
+    "multimodal_metadata_extract",
+    "multimodal_pdf_text_extract",
+    "multimodal_png_roundtrip_dhash",
+    "multimodal_resize",
+    "multimodal_tiff_roundtrip_dhash",
+    "multimodal_video_scene_cuts",
+    "multimodal_wav_roundtrip_stats",
+    "multimodal_y4m_roundtrip_stats",
+    "pipeline_crawl_extract",
+    "scan_avro_roundtrip",
+    "scan_csv_roundtrip",
+    "scan_tar_webdataset",
+    "scan_warc_roundtrip",
+    "scan_xml_dump_multistream",
+    "scan_zip_roundtrip",
+    "text_bpe_encode",
+    "text_html_extract",
+    "text_normalize_nfc",
+    "text_tfidf_topk",
+    "text_winnowing_fingerprints",
+]
+
+
+@pytest.mark.parametrize("name", _SORTED_RESULT)
+def test_sorted_result_materializes(spark, sf_oracle, name):
+    """The output sort's range exchange reads ``sorted_result``'s
+    rebalance exchange directly, so the range sampler re-reads the
+    materialized result instead of re-running the final stage."""
+    import __spark_entry__  # noqa: F401  (populates the registry)
+
+    inputs = _presort_inputs(REGISTRY[name].build(spark, sf_oracle))
+    assert inputs, f"{name}: no range sort"
+    assert inputs[0].startswith("Exchange hashpartitioning("), inputs
+    assert "REBALANCE_PARTITIONS_BY_COL" in inputs[0], inputs
 
 
 def test_priority_sampling_uses_take_ordered(spark, sf_oracle):
