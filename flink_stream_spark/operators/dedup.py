@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.blocking import (
+    probe_pairs,
+    self_pairs,
+    self_pairs_duck,
+)
 from flink_stream_spark.operators.exactmath import round6_ratio, round6_ratio_sql
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.sortout import sorted_result
@@ -133,26 +138,7 @@ def shared_shingle_candidates(sh: DataFrame, df_cap: int = BLOCK_DF_CAP) -> Data
     exploded (doc_id, shingle) set, one row per distinct shingle per
     doc. See BLOCK_DF_CAP for why hot shingles are excluded from
     blocking."""
-    rare_shingles = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= df_cap)
-        .select("shingle")
-    )
-    rare = sh.join(rare_shingles, "shingle")
-    sa = rare.alias("sa")
-    sb = rare.alias("sb")
-    return (
-        sa.join(
-            sb,
-            (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        )
-        .select(
-            F.col("sa.doc_id").alias("doc_a"), F.col("sb.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    return self_pairs(sh, ["shingle"], df_cap).distinct()
 
 
 def _exact_pair_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
@@ -170,23 +156,25 @@ def _exact_pair_overlap(cand: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-_RARE_CAND_DUCK = f"""
-    dfreq AS (
-      SELECT shingle FROM doc_shingles
-      GROUP BY shingle HAVING COUNT(*) <= {BLOCK_DF_CAP}),
-    rare AS (
-      SELECT s.doc_id, s.shingle
-      FROM doc_shingles s JOIN dfreq USING (shingle)),
-    cand AS (
-      SELECT DISTINCT sa.doc_id AS doc_a, sb.doc_id AS doc_b
-      FROM rare sa JOIN rare sb
-        ON sa.shingle = sb.shingle AND sa.doc_id < sb.doc_id),
-    pair_overlap AS (
+def _overlap_duck(sh: str) -> str:
+    """Oracle CTEs over the (doc_id, shingle) relation ``sh``:
+    ``pair_overlap`` (doc_a, doc_b, shared) — the exact overlap of each
+    distinct ``kpairs`` candidate — and ``sizes`` (doc_id, n)."""
+    return f"""pair_overlap AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-      JOIN doc_shingles sa ON sa.doc_id = c.doc_a
-      JOIN doc_shingles sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY 1, 2)
+      FROM (SELECT DISTINCT doc_a, doc_b FROM kpairs) c
+      JOIN {sh} sa ON sa.doc_id = c.doc_a
+      JOIN {sh} sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
+      GROUP BY 1, 2),
+    sizes AS (SELECT doc_id, COUNT(*) AS n FROM {sh} GROUP BY doc_id)"""
+
+
+# the df-capped blocking family's oracle prefix
+_RARE_CAND_DUCK = f"""
+    WITH doc_shingles AS (
+      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
+    {self_pairs_duck("doc_shingles", ["shingle"], BLOCK_DF_CAP)},
+    {_overlap_duck("doc_shingles")}
 """
 
 
@@ -275,24 +263,48 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).select("doc_id", (F.col("j0") + 1).alias("j"), "minhash")
 
 
-_MINHASH_DUCK = f"""
-    WITH perms AS (
+def minhash_duck(src: str) -> str:
+    """Oracle CTEs (no leading WITH) of the MinHash signature and its
+    LSH bands over the (doc_id, text) relation ``src``: ``shingled``
+    (doc_id, shingle), ``sigs`` (doc_id, j, minhash) and ``banded``
+    (doc_id, band, sig) — banded_frame's layout."""
+    return f"""
+    perms AS (
       SELECT j, 2*j + 1 AS a, (j * 40503) % {P31} AS b
       FROM (SELECT unnest(generate_series(1, {K_PERM})) AS j)),
     shingled AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
+      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM {src}),
     hashed AS (
       SELECT DISTINCT doc_id, {tok_hash_duck('shingle')} % {P31} AS h FROM shingled),
     sigs AS (
       SELECT doc_id, j, MIN((a * h + b) % {P31}) AS minhash
       FROM hashed CROSS JOIN perms
-      GROUP BY doc_id, j)
-"""
+      GROUP BY doc_id, j),
+    banded AS (
+      SELECT doc_id, CAST(FLOOR((j - 1) / {ROWS_PER_BAND}) AS INTEGER) AS band,
+             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY j) AS sig
+      FROM sigs GROUP BY doc_id, 2)"""
+
+
+def verified_pairs_duck(src: str) -> str:
+    """Oracle CTEs (no leading WITH) of the MinHash-LSH pair pipeline
+    over ``src``, ending at ``verified`` (doc_a, doc_b, jaccard): band
+    candidates verified by exact Jaccard >= 0.5."""
+    return minhash_duck(src) + f""",
+    {self_pairs_duck("banded", ["band", "sig"])},
+    {_overlap_duck("shingled")},
+    verified AS (
+      SELECT p.doc_a, p.doc_b,
+             {round6_ratio_sql('p.shared', 'za.n + zb.n - p.shared')} AS jaccard
+      FROM pair_overlap p JOIN sizes za ON za.doc_id = p.doc_a
+                          JOIN sizes zb ON zb.doc_id = p.doc_b
+      WHERE CAST(p.shared AS DOUBLE) / (za.n + zb.n - p.shared) >= 0.5)"""
 
 
 @register(
     "dedup_minhash_signature",
-    _MINHASH_DUCK
+    "WITH"
+    + minhash_duck("documents")
     + """
     SELECT doc_id, CAST(j AS BIGINT) AS j, CAST(minhash AS BIGINT) AS minhash
     FROM sigs
@@ -346,62 +358,17 @@ def banded_frame(sig_wide: DataFrame) -> DataFrame:
 def lsh_candidate_pairs(sig_wide: DataFrame) -> DataFrame:
     """Band the wide signature frame and self-join buckets → candidate
     pairs. The join key is (band, signature): only same-bucket docs
-    pair up, so the cost is Σ bucket² — LSH's point — not n².
-    """
-    banded = banded_frame(sig_wide)
-    # bucket-group instead of self-join: the signature pipeline is
-    # evaluated ONCE, and pairs are expanded inside each bucket's
-    # sorted doc_id array (buckets are small by construction — that is
-    # LSH's contract; a hot bucket means the band config is wrong)
-    buckets = (
-        banded.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds") > 1)
-    )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
+    pair up, so the cost is Σ bucket² — LSH's point — not n². Uncapped,
+    so the bucket-list form of operators/blocking.py."""
+    return self_pairs(banded_frame(sig_wide), ["band", "sig"]).distinct()
 
 
 @register(
     "dedup_minhash_lsh_pairs",
-    _MINHASH_DUCK
-    + f"""
-    , banded AS (
-      SELECT doc_id, CAST(FLOOR((j - 1) / {ROWS_PER_BAND}) AS INTEGER) AS band,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY j) AS sig
-      FROM sigs GROUP BY doc_id, 2),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-    doc_shingles AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
-    pair_overlap AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-        JOIN doc_shingles sa ON sa.doc_id = c.doc_a
-        JOIN doc_shingles sb ON sb.doc_id = c.doc_b AND sa.shingle = sb.shingle
-      GROUP BY c.doc_a, c.doc_b),
-    sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id)
-    SELECT p.doc_a, p.doc_b,
-           {round6_ratio_sql('p.shared', 'za.n + zb.n - p.shared')} AS jaccard
-    FROM pair_overlap p JOIN sizes za ON za.doc_id = p.doc_a
-                        JOIN sizes zb ON zb.doc_id = p.doc_b
-    WHERE CAST(p.shared AS DOUBLE) / (za.n + zb.n - p.shared) >= 0.5
-    ORDER BY p.doc_a, p.doc_b
+    "WITH"
+    + verified_pairs_duck("documents")
+    + """
+    SELECT doc_a, doc_b, jaccard FROM verified ORDER BY doc_a, doc_b
     """,
     group="dedup",
     doc="Full MinHash-LSH near-dup pipeline: shingle → K=32 minhashes → "
@@ -491,11 +458,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    f"""
-    WITH doc_shingles AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
-    {_RARE_CAND_DUCK},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id)
+    _RARE_CAND_DUCK
+    + f"""
     SELECT p.doc_a, p.doc_b,
            {round6_ratio_sql('p.shared', 'za.n + zb.n - p.shared')} AS jaccard
     FROM pair_overlap p JOIN sizes za ON za.doc_id = p.doc_a
@@ -945,39 +909,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     return labels
 
 
-_VERIFIED_PAIRS_DUCK = (
-    _MINHASH_DUCK
-    + f"""
-    , banded AS (
-      SELECT doc_id, CAST(FLOOR((j - 1) / {ROWS_PER_BAND}) AS INTEGER) AS band,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY j) AS sig
-      FROM sigs GROUP BY doc_id, 2),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-    doc_shingles AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
-    pair_overlap AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-        JOIN doc_shingles sa ON sa.doc_id = c.doc_a
-        JOIN doc_shingles sb ON sb.doc_id = c.doc_b AND sa.shingle = sb.shingle
-      GROUP BY c.doc_a, c.doc_b),
-    sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id),
-    verified AS (
-      SELECT p.doc_a, p.doc_b
-      FROM pair_overlap p JOIN sizes za ON za.doc_id = p.doc_a
-                          JOIN sizes zb ON zb.doc_id = p.doc_b
-      WHERE CAST(p.shared AS DOUBLE) / (za.n + zb.n - p.shared) >= 0.5)
-"""
-)
-
-
 # transitive closure over the verified pair graph — the single source
-# for every cluster-based oracle (assignment, canonical doc, dup rate);
-# callers prepend _VERIFIED_PAIRS_DUCK with the WITH RECURSIVE rewrite
+# for every cluster-based oracle (assignment, canonical doc, dup rate)
 _CLUSTERED_DUCK = """
     , cluster_edges AS (
       SELECT doc_a AS a, doc_b AS b FROM verified
@@ -992,8 +925,7 @@ _CLUSTERED_DUCK = """
 """
 
 _VERIFIED_CLUSTERED_DUCK = (
-    _VERIFIED_PAIRS_DUCK.replace("WITH perms", "WITH RECURSIVE perms", 1)
-    + _CLUSTERED_DUCK
+    "WITH RECURSIVE" + verified_pairs_duck("documents") + _CLUSTERED_DUCK
 )
 
 
@@ -1096,11 +1028,8 @@ def dedup_prefix_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_shingle_containment",
-    f"""
-    WITH doc_shingles AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents),
-    {_RARE_CAND_DUCK},
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id)
+    _RARE_CAND_DUCK
+    + f"""
     SELECT p.doc_a, p.doc_b,
            {round6_ratio_sql('p.shared', 'LEAST(za.n, zb.n)')}
              AS containment
@@ -1539,22 +1468,20 @@ def dedup_exact_substr_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # id (sources src0..src9 are the already-ingested corpus; src10+ are
 # the new batch). In production the index side is the persisted band
 # index the streaming twin (streaming/dedup_stream.py) accumulates;
-# here it is derived inline from the same banded_frame so batch and
-# stream share one banding contract.
+# here it is derived inline from the same banded_frame and probed with
+# the same blocking.probe_pairs join, so batch and stream share both
+# the banding and the candidate join.
 IDX_SOURCE_MAX = 10
 
 
 @register(
     "dedup_incremental_new_batch",
-    _MINHASH_DUCK
-    + f"""
-    , split AS (
+    "WITH"
+    + minhash_duck("documents")
+    + f""",
+    split AS (
       SELECT doc_id, CAST(substr(source, 4) AS INT) < {IDX_SOURCE_MAX} AS is_index
       FROM documents),
-    banded AS (
-      SELECT doc_id, CAST(FLOOR((j - 1) / {ROWS_PER_BAND}) AS INTEGER) AS band,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY j) AS sig
-      FROM sigs GROUP BY doc_id, 2),
     inc AS (SELECT doc_id FROM split WHERE NOT is_index),
     cand AS (
       SELECT DISTINCT bi.doc_id AS doc_id, bx.doc_id AS idx_doc
@@ -1606,16 +1533,14 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(idx_hashes, "h", "left")
         .select("doc_id", F.col("__hit").isNotNull().alias("exact_dup"))
     )
-    bi = banded_frame(minhash_wide(inc))
-    bx = (
-        banded_frame(minhash_wide(idx))
-        .withColumnRenamed("doc_id", "idx_doc")
-    )
     per_doc = (
-        bi.join(bx, ["band", "sig"])
-        .select("doc_id", "idx_doc")
+        probe_pairs(
+            banded_frame(minhash_wide(inc)),
+            banded_frame(minhash_wide(idx)),
+            ["band", "sig"],
+        )
         .distinct()
-        .groupBy("doc_id")
+        .groupBy(F.col("new_doc").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_index_candidates"))
     )
     return (

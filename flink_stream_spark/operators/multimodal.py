@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.blocking import self_pairs, self_pairs_duck
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.sortout import sorted_result
 
@@ -722,26 +723,7 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
     e = bands.select(
         "doc_id", F.posexplode(dhash_band_vals(nb)).alias("band_idx", "band_val")
     )
-    hot_ok = (
-        e.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= DHASH_BAND_CAP)
-        .select("band_idx", "band_val")
-    )
-    eb = e.join(hot_ok, ["band_idx", "band_val"])
-    cand = (
-        eb.alias("ea")
-        .join(
-            eb.alias("eb"),
-            (F.col("ea.band_idx") == F.col("eb.band_idx"))
-            & (F.col("ea.band_val") == F.col("eb.band_val"))
-            & (F.col("ea.doc_id") < F.col("eb.doc_id")),
-        )
-        .select(
-            F.col("ea.doc_id").alias("doc_a"), F.col("eb.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = self_pairs(e, ["band_idx", "band_val"], DHASH_BAND_CAP).distinct()
     ba = bands.select(F.col("doc_id").alias("doc_a"), F.col("bands").alias("ba"))
     bb = bands.select(F.col("doc_id").alias("doc_b"), F.col("bands").alias("bb"))
     # exact Hamming over the full 64 bits (dhash_hamming: 8 codegen'd
@@ -795,21 +777,13 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
                   + 16777216 * CAST(bands[4*r + 4] AS BIGINT)
              END AS band_val
       FROM b, unnest(generate_series(0, (SELECT nb FROM kk) - 1)) AS t(r)),
-    grp AS (
-      SELECT band_idx, band_val FROM e
-      GROUP BY 1, 2 HAVING COUNT(*) <= {DHASH_BAND_CAP}),
-    cand AS (
-      SELECT DISTINCT ea.doc_id AS doc_a, eb.doc_id AS doc_b
-      FROM e ea
-      JOIN grp g ON g.band_idx = ea.band_idx AND g.band_val = ea.band_val
-      JOIN e eb ON eb.band_idx = ea.band_idx AND eb.band_val = ea.band_val
-                AND ea.doc_id < eb.doc_id),
+    {self_pairs_duck("e", ["band_idx", "band_val"], DHASH_BAND_CAP)},
     pairs AS (
       SELECT c.doc_a, c.doc_b,
         CAST(list_aggregate(list_transform(generate_series(1, {DHASH_ROWS}),
           i -> bit_count(xor(ba.bands[i], bb.bands[i]))), 'sum') AS BIGINT)
           AS hamming
-      FROM cand c
+      FROM (SELECT DISTINCT doc_a, doc_b FROM kpairs) c
       JOIN b ba ON ba.doc_id = c.doc_a
       JOIN b bb ON bb.doc_id = c.doc_b)
     SELECT doc_a, doc_b, hamming FROM pairs
@@ -1427,29 +1401,15 @@ def banded_l1_near_dup_pairs(
     l1_dist): banded nomination + exact L1 <= ``mod.l1_max`` verify.
     The kernel of ``multimodal_audio_dedup_envelope`` (AUDIO_ENVELOPE)
     and ``multimodal_video_dedup_motion`` (VIDEO_MOTION); the streaming
-    audio/video twins share its ``BandedL1`` band rows and verify
-    predicate, not this function. ``cap_hot`` applies the batch-global
-    hot-band cap (the streaming probe side must NOT cap — see
-    streaming/audio_dedup_stream.py)."""
-    bv = mod.band_rows(stats)
-    if cap_hot:
-        hot_ok = (
-            bv.groupBy("band_idx", "band_val")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= mod.band_cap)
-            .select("band_idx", "band_val")
-        )
-        bv = bv.join(hot_ok, ["band_idx", "band_val"])
+    audio/video twins share its ``BandedL1`` band rows, its blocking
+    join (operators/blocking.py) and its verify predicate. ``cap_hot``
+    applies the batch-global hot-band cap (the streaming probe side
+    must NOT cap — the parity rule in operators/blocking.py)."""
     cand = (
-        bv.alias("a")
-        .join(
-            bv.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        self_pairs(
+            mod.band_rows(stats),
+            ["band_idx", "band_val"],
+            mod.band_cap if cap_hot else None,
         )
         # width-pinned dedup: a bare .distinct() exchange AQE-coalesces
         # by bytes to 1-2 partitions, serializing the dedup AND the
@@ -1485,20 +1445,12 @@ def banded_l1_near_dup_pairs(
                + 35937 * qe[4*b + 4] AS band_val
       FROM q, unnest(generate_series(0, {AUDIO_BANDS - 1})) AS t(b)),
     bvc AS (SELECT * FROM bv WHERE band_val > 0),
-    grp AS (
-      SELECT band_idx, band_val FROM bvc
-      GROUP BY 1, 2 HAVING COUNT(*) <= {AUDIO_BAND_CAP}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bvc a
-      JOIN grp g ON g.band_idx = a.band_idx AND g.band_val = a.band_val
-      JOIN bvc b ON b.band_idx = a.band_idx AND b.band_val = a.band_val
-               AND a.doc_id < b.doc_id),
+    {self_pairs_duck("bvc", ["band_idx", "band_val"], AUDIO_BAND_CAP)},
     pairs AS (
       SELECT c.doc_a, c.doc_b,
         CAST(list_aggregate(list_transform(generate_series(1, {ENV_WINDOWS}),
           i -> abs(ea.env[i] - eb.env[i])), 'sum') AS BIGINT) AS l1_dist
-      FROM cand c
+      FROM (SELECT DISTINCT doc_a, doc_b FROM kpairs) c
       JOIN e ea ON ea.doc_id = c.doc_a
       JOIN e eb ON eb.doc_id = c.doc_b)
     SELECT doc_a, doc_b, l1_dist FROM pairs
@@ -1776,21 +1728,13 @@ def multimodal_avi_mjpeg_roundtrip(
                + 35937 * qb[{VID_BLOCKS}*f + 4] AS band_val
       FROM q, unnest(generate_series(0, {VID_FRAMES - 1})) AS t(f)),
     bvc AS (SELECT * FROM bv WHERE band_val > 0),
-    grp AS (
-      SELECT band_idx, band_val FROM bvc
-      GROUP BY 1, 2 HAVING COUNT(*) <= {VID_BAND_CAP}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bvc a
-      JOIN grp g ON g.band_idx = a.band_idx AND g.band_val = a.band_val
-      JOIN bvc b ON b.band_idx = a.band_idx AND b.band_val = a.band_val
-               AND a.doc_id < b.doc_id),
+    {self_pairs_duck("bvc", ["band_idx", "band_val"], VID_BAND_CAP)},
     pairs AS (
       SELECT c.doc_a, c.doc_b,
         CAST(list_aggregate(list_transform(
                generate_series(1, {VID_FRAMES * VID_BLOCKS}),
                i -> abs(sa.bm[i] - sb.bm[i])), 'sum') AS BIGINT) AS l1_dist
-      FROM cand c
+      FROM (SELECT DISTINCT doc_a, doc_b FROM kpairs) c
       JOIN s sa ON sa.doc_id = c.doc_a
       JOIN s sb ON sb.doc_id = c.doc_b)
     SELECT doc_a, doc_b, l1_dist FROM pairs
@@ -2104,13 +2048,8 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
              (pkb - 1) * 512 + (p1 - 1) * 64 + (p2 - 1) * 8 + (p3 - 1) AS fp
       FROM seq WHERE valid AND v1 AND v2 AND v3),
     cnt AS (SELECT doc_id, COUNT(*) AS c FROM fp GROUP BY doc_id),
-    ok AS (SELECT fp FROM fp GROUP BY fp HAVING COUNT(*) <= {FP_CAP}),
-    pr AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS ns
-      FROM fp a
-      JOIN ok ON ok.fp = a.fp
-      JOIN fp b ON b.fp = a.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
+    {self_pairs_duck("fp", ["fp"], FP_CAP)},
+    pr AS (SELECT doc_a, doc_b, COUNT(*) AS ns FROM kpairs GROUP BY 1, 2),
     m AS (
       SELECT pr.doc_a, pr.doc_b, pr.ns, ca.c AS ca, cb.c AS cb
       FROM pr
@@ -2147,19 +2086,8 @@ def multimodal_audio_fingerprint_pairs(
     d = load_table(spark, sf_dir, "documents")
     fp = audio_fingerprints(_wavfp_media(d)).persist()
     cnt = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    ok = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("__n")).filter(
-        F.col("__n") <= FP_CAP
-    )
-    a = fp.join(ok.select("fp"), "fp").select(
-        F.col("fp").alias("fp_a"), F.col("doc_id").alias("doc_a")
-    )
-    b = fp.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("doc_b"))
     pr = (
-        a.join(
-            b,
-            (F.col("fp_a") == F.col("fp_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
+        self_pairs(fp, ["fp"], FP_CAP)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("ns"))
     )

@@ -26,13 +26,10 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.dedup import (
-    K_PERM,
-    P31,
-    ROWS_PER_BAND,
-    _SHINGLES_DUCK,
     lsh_candidate_pairs,
     minhash_wide,
     shingled_docs,
+    verified_pairs_duck,
 )
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.text import tok_hash_duck
@@ -49,38 +46,8 @@ from flink_stream_spark.operators.text import tok_hash_duck
       SELECT MIN(doc_id) AS doc_id FROM quality GROUP BY sha256(text)),
     survivors AS (
       SELECT q.doc_id, q.text FROM quality q JOIN exact_keep k ON q.doc_id = k.doc_id),
-    perms AS (
-      SELECT j, 2*j + 1 AS a, (j * 40503) % {P31} AS b
-      FROM (SELECT unnest(generate_series(1, {K_PERM})) AS j)),
-    shingled AS (
-      SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM survivors),
-    hashed AS (
-      SELECT DISTINCT doc_id, {tok_hash_duck('shingle')} % {P31} AS h FROM shingled),
-    sigs AS (
-      SELECT doc_id, j, MIN((a * h + b) % {P31}) AS minhash
-      FROM hashed CROSS JOIN perms
-      GROUP BY doc_id, j),
-    banded AS (
-      SELECT doc_id, CAST(FLOOR((j - 1) / {ROWS_PER_BAND}) AS INTEGER) AS band,
-             string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY j) AS sig
-      FROM sigs GROUP BY doc_id, 2),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-    pair_overlap AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS shared
-      FROM cand c
-        JOIN shingled sa ON sa.doc_id = c.doc_a
-        JOIN shingled sb ON sb.doc_id = c.doc_b AND sa.shingle = sb.shingle
-      GROUP BY c.doc_a, c.doc_b),
-    sizes AS (
-      SELECT doc_id, COUNT(*) AS n FROM shingled GROUP BY doc_id),
-    near_rm AS (
-      SELECT DISTINCT p.doc_b AS doc_id
-      FROM pair_overlap p JOIN sizes za ON za.doc_id = p.doc_a
-                          JOIN sizes zb ON zb.doc_id = p.doc_b
-      WHERE CAST(p.shared AS DOUBLE) / (za.n + zb.n - p.shared) >= 0.5)
+    {verified_pairs_duck("survivors")},
+    near_rm AS (SELECT DISTINCT doc_b AS doc_id FROM verified)
     SELECT s.doc_id,
            CAST(LENGTH(s.text) AS BIGINT) AS chars,
            CAST(len(string_split(s.text, ' ')) AS BIGINT) AS tokens

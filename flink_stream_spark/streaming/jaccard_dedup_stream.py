@@ -100,7 +100,8 @@ def _candidates(pa: DataFrame, pb: DataFrame, within_batch: bool) -> DataFrame:
     """Prefix-share candidates (new_doc, old_doc) with the length and
     PPJoin positional filters riding the join condition — identical
     discipline to the batch join. Identity filter as in
-    ``near_dup.band_candidates``."""
+    operators/blocking.py (``!=`` against the index, ``<`` within
+    the batch)."""
     cols = ("doc_id", "shingle", "rk", "n")
     a = pa.select(*cols).toDF("new_doc", "sh_a", "ra", "na")
     b = pb.select(*cols).toDF("old_doc", "sh_b", "rb", "nb")

@@ -20,19 +20,19 @@ This module owns the rest — the admission policy:
   fixed order (flags first, then each index table);
 - post-commit small-files maintenance (``maybe_compact``).
 
-The probe joins exclude self-pairs, so a replay against a
-partially-committed epoch (index already holding this batch's kept
-docs) still computes the identical flag set.
+The probe joins exclude self-pairs (operators/blocking.py's identity
+filter), so a replay against a partially-committed epoch (index already
+holding this batch's kept docs) still computes the identical flag set.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_stream_spark.operators.blocking import probe_pairs, self_pairs
 from flink_stream_spark.tables.managed import ManagedTable
 
 
@@ -109,29 +109,20 @@ def resolve_greedy_keep_first(
 
 
 def band_candidates(new: DataFrame, old: DataFrame, within_batch: bool) -> DataFrame:
-    """Distinct (new_doc, old_doc) pairs sharing a band bucket: equality
-    on every column but ``doc_id`` — (band, sig) for MinHash,
-    (band_idx, band_val) for the raw-signal twins. Against the index
-    the only identity filter is ``!=`` (self-pairs of a replayed epoch);
-    within the batch ``old < new`` keeps each pair once, the smaller id
-    on the "old" (keep-first) side."""
-    same = reduce(
-        lambda a, b: a & b,
-        [F.col(f"n.{c}") == F.col(f"o.{c}") for c in new.columns if c != "doc_id"],
-    )
-    ident = (
-        F.col("o.doc_id") < F.col("n.doc_id")
-        if within_batch
-        else F.col("o.doc_id") != F.col("n.doc_id")
-    )
-    return (
-        new.alias("n")
-        .join(old.alias("o"), same & ident)
-        .select(
-            F.col("n.doc_id").alias("new_doc"), F.col("o.doc_id").alias("old_doc")
+    """Distinct (new_doc, old_doc) pairs sharing a band bucket: every
+    column but ``doc_id`` is a key — (band, sig) for MinHash,
+    (band_idx, band_val) for the raw-signal twins. Against the index,
+    ``probe_pairs``; within the batch, the uncapped ``self_pairs`` with
+    the smaller id on the "old" (keep-first) side. Never capped: the
+    parity rule in operators/blocking.py."""
+    keys = [c for c in new.columns if c != "doc_id"]
+    if within_batch:
+        pairs = self_pairs(new, keys).select(
+            F.col("doc_b").alias("new_doc"), F.col("doc_a").alias("old_doc")
         )
-        .distinct()
-    )
+    else:
+        pairs = probe_pairs(new, old, keys)
+    return pairs.distinct()
 
 
 def verified_pairs(

@@ -84,7 +84,8 @@ def _cosine_dup_pairs(new: DataFrame, old: DataFrame, within_batch: bool) -> Dat
     """Cluster-blocked candidate pairs carrying both scaled vectors,
     exact cosine >= SEMDEDUP_TAU verified with the batch kernel's
     threshold arithmetic. Identity filter as in
-    ``near_dup.band_candidates``."""
+    operators/blocking.py (``!=`` against the index, ``<`` within
+    the batch)."""
     cols = ("vec_id", "cl", "s", "nrm")
     n_side = new.select(*cols).toDF("new_doc", "cl_new", "s_new", "nrm_new")
     o_side = old.select(*cols).toDF("old_doc", "cl_old", "s_old", "nrm_old")

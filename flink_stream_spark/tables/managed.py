@@ -433,23 +433,11 @@ class ManagedTable:
 
         Tokens live in the append-only commit log (one sequential read
         regardless of version count) and SURVIVE snapshot expiry — a
-        replay after maintenance must still no-op. Retained manifests
-        are unioned in for tables written before the log carried
-        tokens."""
-        cur = self.current_version()
-        out = {
-            c["token"]
-            for c in self._raw_commit_log()
-            if c.get("token") and int(c["version"]) <= cur
-        }
-        for v in range(1, cur + 1):
-            try:
-                tok = self._load_manifest(v).get("token")
-            except FileNotFoundError:
-                continue  # expired snapshot: its token is in the log
-            if tok:
-                out.add(tok)
-        return out
+        replay after maintenance must still no-op. They are read
+        through ``versions()``, so a token logged by a commit that
+        crashed before its pointer flip does not count once another
+        commit reuses that version number (the last entry wins)."""
+        return {c["token"] for c in self.versions() if c.get("token")}
 
     def _commit(
         self,

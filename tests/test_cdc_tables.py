@@ -11,6 +11,7 @@ and snapshot expiry.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -727,6 +728,21 @@ def test_tokens_survive_snapshot_expiry(spark, tmp_path):
     assert "epoch:1" in t.committed_tokens()
     t.append(spark.createDataFrame([(1, "dup")], "k int, v string"), token="epoch:1")
     assert t.read(spark).count() == 2  # replay was a no-op
+
+
+def test_unflipped_token_does_not_count_after_version_reuse(spark, tmp_path):
+    """A commit that crashed after its log append but before the pointer
+    flip leaves its token on a version another writer then commits.
+    Replaying the crashed batch must land its rows, not no-op."""
+    t = ManagedTable(str(tmp_path), "tok", ["k"])
+    t.append(spark.createDataFrame([(1,)], "k int"), token="A")
+    with open(os.path.join(t.meta_dir, "commits.jsonl"), "a") as f:
+        f.write(json.dumps({"version": 2, "token": "B"}) + "\n")  # no flip
+    t.append(spark.createDataFrame([(2,)], "k int"), token="C")
+    assert t.committed_tokens() == {"A", "C"}
+    t.append(spark.createDataFrame([(3,)], "k int"), token="B")  # the replay
+    assert t.current_version() == 3
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 2, 3]
 
 
 def test_changes_null_vs_null_string(spark, tmp_path):

@@ -434,6 +434,22 @@ def test_sorted_result_materializes(spark, sf_oracle, name):
     assert "REBALANCE_PARTITIONS_BY_COL" in inputs[0], inputs
 
 
+def test_blocking_form_rule(spark, sf_oracle):
+    """operators/blocking.py's form rule: the uncapped MinHash-LSH
+    self-join expands one collect_list per bucket; the capped dHash
+    join counts and joins back, so no bucket is ever collected."""
+    import flink_stream_spark.operators.multimodal  # noqa: F401
+
+    def simple(name):
+        df = REGISTRY[name].build(spark, sf_oracle)
+        return spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "simple"
+        )
+
+    assert simple("dedup_minhash_lsh_pairs").count("functions=[collect_list(") == 1
+    assert "collect_list" not in simple("multimodal_image_dedup_dhash")
+
+
 def test_priority_sampling_uses_take_ordered(spark, sf_oracle):
     import flink_stream_spark.operators.sampling  # noqa: F401
 
