@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _MAGIC = b"Obj\x01"
 _SYNC_LEN = 16
@@ -357,7 +357,7 @@ def avro_scan(spark: SparkSession, avro_dir: str, n_splits_per_file: int = 4) ->
             splits.append((path, a, b))
     sdf = spark.createDataFrame(
         splits, "path string, start bigint, end bigint"
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ).transform(spread)
 
     def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib

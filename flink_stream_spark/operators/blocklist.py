@@ -36,8 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 # fixture blocklist: two-word phrases over the corpus vocabulary
 # (some frequent, some rare, some absent) — all border-free so the
@@ -159,8 +159,7 @@ _ORACLE = (
 )
 def filter_blocklist_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    src = d.repartition(par, "doc_id").select("doc_id", "text")
+    src = spread(d, "doc_id").select("doc_id", "text")
     phrases = spark.sparkContext.broadcast(_PHRASES)
 
     def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

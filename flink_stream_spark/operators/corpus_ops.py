@@ -34,9 +34,10 @@ from flink_stream_spark.operators.dedup import (
     connected_components,
     dedup_minhash_lsh_pairs,
 )
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.sampling import hash_bucket, _bucket_duck
-from flink_stream_spark.operators.sortout import sorted_result
+from flink_stream_spark.plans.scale import range_offsets
 
 BENCH_SOURCE = "src0"  # stands in for the held-out eval set
 NGRAM = 5  # decontamination n-gram size
@@ -101,8 +102,7 @@ def _ngrams_duck(n: int) -> str:
 )
 def text_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").withColumn("__toks", F.split("text", " "))
+    toked = spread(d, "doc_id").withColumn("__toks", F.split("text", " "))
     grams = _ngrams_spark(F.col("__toks"), F.size("__toks"), NGRAM)
     bench = (
         toked.filter(F.col("source") == BENCH_SOURCE)
@@ -168,9 +168,8 @@ STRIDE = 24  # tokens between chunk starts (8-token overlap)
 )
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toked = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .withColumn("__toks", F.split("text", " "))
         .withColumn("__n", F.size("__toks"))
     )
@@ -444,7 +443,6 @@ _PHONE_RE = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
 )
 def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     seeded_text = F.concat(
         F.col("text"),
         F.when(
@@ -459,7 +457,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_id") % 10 == 5, F.lit(" mail to admin@test.org"))
         .otherwise(F.lit("")),
     )
-    seeded = d.repartition(par, "doc_id").select("doc_id", seeded_text.alias("text"))
+    seeded = spread(d, "doc_id").select("doc_id", seeded_text.alias("text"))
     redacted = F.regexp_replace(
         F.regexp_replace("text", _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>"
     )
@@ -513,8 +511,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toks = d.repartition(par, "doc_id").select(
+    toks = spread(d, "doc_id").select(
         "doc_id", F.explode(F.split("text", " ")).alias("token")
     )
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
@@ -571,9 +568,8 @@ VOCAB_TOPK = 100
 )
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     counts = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -681,8 +677,8 @@ PACK_WINDOW = 2048  # tokens per training sequence
     "The global running offset is NOT a single-task window: it is "
     "computed with the distributed global-cumsum pattern (range "
     "partition on the order key -> per-partition cumsum -> broadcast "
-    "partition offsets), the same plan plans/scale.with_global_rank "
-    "uses — so packing parallelizes at scan width while matching the "
+    "partition offsets): plans/scale.range_offsets, which "
+    "plans/scale.with_global_rank also uses — so packing parallelizes at scan width while matching the "
     "sequential ORDER BY semantics exactly.",
 )
 def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,27 +687,14 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
     )
-    n = spark.sparkContext.defaultParallelism
-    # lazy localCheckpoint pins ONE range partitioning for both the
-    # offsets branch and the cumsum branch (see plans/scale.py
-    # with_global_rank for the reuse-dependence rationale)
-    parted = (
-        toks.repartitionByRange(n, "doc_id")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    sizes = parted.groupBy("__pid").agg(F.sum("n_tokens").alias("__psum"))
-    w_off = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "__pid", F.coalesce(F.sum("__psum").over(w_off), F.lit(0)).alias("__poff")
-    )
+    parted, offsets = range_offsets(toks, ["doc_id"], "n_tokens")
     w_in = W.partitionBy("__pid").orderBy("doc_id").rowsBetween(
         W.unboundedPreceding, -1
     )
     cum = (
         parted.withColumn("__local", F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0)))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn("off", F.col("__local") + F.col("__poff"))
+        .join(offsets, "__pid")
+        .withColumn("off", F.col("__local") + F.col("__off"))
     )
     return cum.select(
         "doc_id",
@@ -768,8 +751,7 @@ LINE_DF_DROP = 3  # corpus frequency at which a line is boilerplate
 )
 def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").select(
+    toked = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ts")
     )
     n_chunks = F.ceil(F.size("ts") / F.lit(float(LINE_TOKENS))).cast("int")
@@ -869,7 +851,7 @@ def _bpe_oracle() -> str:
     return "".join(parts) + f"\n    {union}\n    ORDER BY round\n    "
 
 
-def _bpe_rounds(d: DataFrame, par: int):
+def _bpe_rounds(d: DataFrame):
     """Run the BPE_ROUNDS greedy merge loop over the framed corpus rep.
 
     Returns (rep0, [(round, a, b, c, rep_after_round), ...]) — the
@@ -1003,8 +985,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    _, rounds = _bpe_rounds(d.repartition(par, "doc_id"), par)
+    _, rounds = _bpe_rounds(spread(d, "doc_id"))
     out = []
     for r, a, b, c, rep in rounds:
         stats = (
@@ -1047,8 +1028,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    rep0, rounds = _bpe_rounds(d.repartition(par, "doc_id"), par)
+    rep0, rounds = _bpe_rounds(spread(d, "doc_id"))
     final_rep = rounds[-1][4]
 
     def n_of(c: str):

@@ -32,8 +32,8 @@ from flink_stream_spark.operators.blocking import (
     self_pairs_duck,
 )
 from flink_stream_spark.operators.exactmath import round6_ratio, round6_ratio_sql
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 from flink_stream_spark.operators.text import tok_hash_duck, _tok_hash_spark
 
 # MinHash parameters (fixed-seed permutations j=1..K over a Mersenne
@@ -82,8 +82,7 @@ def shingled_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
       otherwise split(text) re-evaluates per shingle inside the
       lambda (no common-subexpression elimination inside HOFs).
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    toked = docs.repartition(par, "doc_id").withColumn("__toks", F.split(F.col(text_col), " "))
+    toked = spread(docs, "doc_id").withColumn("__toks", F.split(F.col(text_col), " "))
     n = F.size(F.col("__toks"))
     shingles = F.array_distinct(
         F.transform(
@@ -430,9 +429,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized |tokens|×31 intermediate rows and a second shuffle;
     # this form's shuffle is |docs|×31 ints with map-side combine.
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toks = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.explode_outer(F.array_distinct(F.split("text", " "))).alias("tok"))
         .filter(F.col("tok").isNotNull())
     )
@@ -607,8 +605,7 @@ def dedup_jaccard_prefix_filter(
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    docs = d.repartition(par, "doc_id").select(
+    docs = spread(d, "doc_id").select(
         "doc_id", F.md5(F.encode("text", "utf-8")).alias("gkey"), "text"
     )
     members = docs.select("gkey", "doc_id").persist()
@@ -813,9 +810,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Norms are precomputed per row (not per pair): only the dot
     # product remains in the pair loop — same values, 3× less
     # interpreted-lambda work.
-    par = spark.sparkContext.defaultParallelism
     en = e.withColumn("__norm", _norm_expr(F.col("embedding")))
-    a = en.repartition(par, "vec_id").alias("a")
+    a = spread(en, "vec_id").alias("a")
     b = en.alias("b")
     cos = _dot_expr(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.__norm") * F.col("b.__norm")
@@ -1192,8 +1188,7 @@ def dedup_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").select(
+    toked = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ts")
     )
     n = F.size("ts")
@@ -1455,8 +1450,7 @@ def suffix_array_span_stats(toked: DataFrame) -> DataFrame:
 )
 def dedup_exact_substr_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").select(
+    toked = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ts")
     )
     # without the result-sized exchange the range sampler re-ran the

@@ -31,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _WORK = "/tmp/flink_stream_spark/formats"
 

@@ -300,11 +300,12 @@ WEDGE_WAVES = 3
 def _wedge_parallelism(oriented: DataFrame) -> int:
     """Shuffle width for the wedge-join stage, derived from the EXACT
     wedge cardinality sum(outdeg * (outdeg - 1)) — one bounded scalar
-    job over the checkpointed edge list (output: one row). The session
-    pins spark.sql.shuffle.partitions=32 for oracle determinism, and
-    AQE can only COALESCE below that number, never widen it — so at
-    sf3 the ~600M-row wedge intermediate used to land on 32 partitions
-    (~19M rows each) and the round-7 probes recorded GCLocker thrash
+    job over the checkpointed edge list (output: one row). ``get_spark``
+    sets spark.sql.shuffle.partitions to the session's core count
+    ($SPARK_GRAFT_CPUS, default 32), and AQE can only COALESCE below
+    that number, never widen it — so at 32 cores and sf3 the ~600M-row
+    wedge intermediate used to land on 32 partitions (~19M rows each)
+    and the round-7 probes recorded GCLocker thrash
     and super-linear wall (sf1->sf3 ratio 3.5-4.8x for exactly-linear
     true work). The width targets ~WEDGE_WAVES waves of the session's
     cores, bounded below by the per-task memory cap

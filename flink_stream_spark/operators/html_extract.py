@@ -54,8 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 # subtrees whose character data is never content
 _DROP_TAGS = {"script", "style", "noscript", "template", "svg", "head"}
@@ -262,7 +262,6 @@ def _wrapped_html_col():
 )
 def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     # classifiability gate, mirrored in the oracle's WHERE: the closed
     # form (1 content block, 4 + doc_id%4 boilerplate) only holds for
     # documents the length rule classifies as content — a text shorter
@@ -272,7 +271,7 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-set change instead (self-review, round 9).
     src = (
         d.filter(F.length(F.trim(F.col("text"))) >= MIN_CONTENT_CHARS)
-        .repartition(par, "doc_id")
+        .transform(spread, "doc_id")
         .select("doc_id", _wrapped_html_col().alias("html"))
     )
 

@@ -1,4 +1,23 @@
-"""Output-sort helper: materialize result rows before the global sort.
+"""Partition layout: every stage width, and the output-sort exchange.
+
+The engine decides a stage's partition count here and nowhere else.
+``spread(df, *cols)`` is ``df.repartition(<width>, *cols)`` (a
+round-robin repartition when ``cols`` is empty) and
+``spread_range(df, *cols)`` is ``df.repartitionByRange(<width>,
+*cols)``. ``<width>`` is the session's ``defaultParallelism``, the core
+count ``get_spark`` gives the session. A ``REPARTITION_BY_NUM``
+exchange keeps its width at any input size (AQE never coalesces it),
+so the number matters, and a width policy change edits ``_width``
+only.
+
+Three widths are derived from the data and stay at their sites: the
+triangle-count wedge width (``graph._wedge_parallelism``), the tar and
+zip readers' one task per shard, and the table writer's bucket
+exchange (``tables/managed.py``). ``tests/test_plans.py`` lints the
+registry for any other fixed-width exchange.
+
+Output sorts
+------------
 
 Every declared query ends in an ORDER BY so the driver/oracle
 comparison is deterministic. Spark executes a global sort as a range
@@ -40,7 +59,23 @@ determines the output order the oracle hash sees.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+
+
+def _width(df: DataFrame) -> int:
+    return df.sparkSession.sparkContext.defaultParallelism
+
+
+def spread(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` hash-partitioned on ``cols`` at the engine's stage width;
+    round-robin when no ``cols`` are given."""
+    return df.repartition(_width(df), *cols)
+
+
+def spread_range(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``df`` range-partitioned on ``cols`` (names or orderings such as
+    ``F.desc(c)``) at the engine's stage width."""
+    return df.repartitionByRange(_width(df), *cols)
 
 
 def sorted_result(

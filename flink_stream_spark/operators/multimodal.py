@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.blocking import self_pairs, self_pairs_duck
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, fake_width int, fake_height int, checksum string"
@@ -66,18 +66,18 @@ def text_media(
     empty). The source of every codec round-trip query.
 
     Plan: scan → ASCII filter → Exchange hashpartitioning(doc_id,
-    defaultParallelism) → MapInPandas (this encode) → the caller's
-    decode MapInPandas in the same stage. The exchange is the one
-    partition-count site of the round-trips: a single-row-group parquet
-    fixture arrives as 1-2 splits, which would serialize the CPU-bound
-    pure-Python codecs onto 1-2 cores. The queries' ORDER BY then adds
+    <width>) → MapInPandas (this encode) → the caller's decode
+    MapInPandas in the same stage. The exchange is the round-trips'
+    ``spread`` (its width is decided in operators/layout.py): a
+    single-row-group parquet fixture arrives as 1-2 splits, which would
+    serialize the CPU-bound pure-Python codecs onto 1-2 cores. The queries' ORDER BY then adds
     ``sorted_result``'s result-sized hash exchange under the range
     exchange, so a round-trip plan holds two hash exchanges and one
     range exchange around its two Python stages (asserted by
     tests/test_plans.py::test_codec_roundtrip_plan_shape)."""
     src = (
         ascii_docs(docs)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
+        .transform(spread, "doc_id")
         .select("doc_id", F.encode("text", "utf-8").alias("payload"))
     )
 
@@ -714,8 +714,7 @@ def dhash_near_dup_pairs(media: DataFrame, n_docs: "int | None" = None) -> DataF
     # which would serialize the whole Python stage onto 1-2 cores
     # (round-10 sf1 profile: the hash stage ran as 2 tasks on 32
     # cores); elided automatically when a caller already partitioned
-    par = media.sparkSession.sparkContext.defaultParallelism
-    bands = dhash_bands(media.repartition(par, "doc_id")).persist()
+    bands = dhash_bands(spread(media, "doc_id")).persist()
     # adaptive band width from ONE scalar count (see dhash_num_bands);
     # wider bands are algebraic merges of adjacent byte-bands, so the
     # hash stage and the Hamming verify are tier-independent
@@ -1414,12 +1413,10 @@ def banded_l1_near_dup_pairs(
         # width-pinned dedup: a bare .distinct() exchange AQE-coalesces
         # by bytes to 1-2 partitions, serializing the dedup AND the
         # interpreted per-element L1 verify that rides above it
-        # (profiled 2x ~3 s cpu on TWO tasks at sf0.1). The explicit
-        # count pins candidate-proportional width; dropDuplicates on
-        # the same keys rides the pinned exchange without adding one.
-        .repartition(
-            stats.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
-        )
+        # (profiled 2x ~3 s cpu on TWO tasks at sf0.1). ``spread``'s
+        # fixed-width exchange (operators/layout.py) pins the width;
+        # dropDuplicates on the same keys rides it without adding one.
+        .transform(spread, "doc_a", "doc_b")
         .dropDuplicates()
     )
     sig = stats.select("doc_id", mod.sig_col)

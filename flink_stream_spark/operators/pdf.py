@@ -53,8 +53,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _LINES_PER_PAGE = 40
 
@@ -606,9 +606,7 @@ def extract_pdf_text(data: bytes) -> "tuple[str, int, int] | None":
 )
 def multimodal_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    src = d.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    ).select("doc_id", "text")
+    src = spread(d, "doc_id").select("doc_id", "text")
 
     def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib

@@ -33,6 +33,7 @@ from flink_stream_spark.operators.dedup import (
 )
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.text import tok_hash_duck
+from flink_stream_spark.plans.scale import range_offsets
 
 
 @register(
@@ -247,31 +248,17 @@ def pipeline_pretraining_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
         )
     )
-    n = spark.sparkContext.defaultParallelism
-    parted = (
-        toks.repartitionByRange(n, "split", "doc_id")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # pin one range partitioning
-    )
-    # per-(partition, split) sums -> per-split partition offsets: the
-    # same two-level distributed-cumsum shape, reset at each split
-    # (a range partition may hold the boundary between two splits)
-    sizes = parted.groupBy("__pid", "split").agg(F.sum("n_tokens").alias("__psum"))
-    w_off = W.partitionBy("split").orderBy("__pid").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    offsets = sizes.select(
-        "__pid",
-        "split",
-        F.coalesce(F.sum("__psum").over(w_off), F.lit(0)).alias("__poff"),
-    )
+    # per-(partition, split) offsets: the distributed cumsum of
+    # corpus_pack_sequences, reset at each split (a range partition
+    # may hold the boundary between two splits)
+    parted, offsets = range_offsets(toks, ["doc_id"], "n_tokens", groups=("split",))
     w_in = W.partitionBy("__pid", "split").orderBy("doc_id").rowsBetween(
         W.unboundedPreceding, -1
     )
     cum = (
         parted.withColumn("__local", F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0)))
-        .join(F.broadcast(offsets), ["__pid", "split"])
-        .withColumn("off", F.col("__local") + F.col("__poff"))
+        .join(offsets, ["__pid", "split"])
+        .withColumn("off", F.col("__local") + F.col("__off"))
     )
     return cum.select(
         "doc_id",

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import spread, spread_range
 from flink_stream_spark.operators.registry import register
 
 
@@ -74,8 +75,7 @@ from flink_stream_spark.operators.registry import register
 )
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    base = d.repartition(par, "doc_id").select(
+    base = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("t")
     )
     n = F.size("t")
@@ -357,8 +357,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture file arrives as 1-2 input splits — text.py:181 trap), and
     # a partition-local sort then yields the totally-ordered result
     # without a second global sort exchange of the scored rows.
-    par = spark.sparkContext.defaultParallelism
-    return gopher_score(d.repartitionByRange(par, "doc_id")).sortWithinPartitions(
+    return gopher_score(spread_range(d, "doc_id")).sortWithinPartitions(
         "doc_id"
     )
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import spread
 from flink_stream_spark.operators.registry import register
 from flink_stream_spark.operators.text import _tok_hash_spark, tok_hash_duck
 
@@ -327,8 +328,7 @@ def dsir_bigram_buckets(d: DataFrame) -> DataFrame:
 )
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    big = dsir_bigram_buckets(d.repartition(par, "doc_id"))
+    big = dsir_bigram_buckets(spread(d, "doc_id"))
     tf = big.groupBy("doc_id", "is_target", "b").agg(F.count(F.lit(1)).alias("tf"))
     # Both bucket LMs in ONE aggregation over tf (round-9
     # optimization, guide §2.3 "aggregate before you shuffle"): the

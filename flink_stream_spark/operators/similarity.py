@@ -23,8 +23,8 @@ from pyspark.sql.window import Window as W
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.dedup import _dot_expr, _norm_expr
+from flink_stream_spark.operators.layout import sorted_result, spread, spread_range
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 N_QUERIES = 5  # query set: vec_id < 5
 TOP_K = 10
@@ -230,8 +230,7 @@ def simsearch_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm_expr(F.col("embedding")).alias("q_norm"),
     )
     # spread the corpus (single-split scan) before the per-row cosine work
-    par = spark.sparkContext.defaultParallelism
-    c = e.repartition(par, "vec_id").select(
+    c = spread(e, "vec_id").select(
         F.col("vec_id").alias("match_id"),
         F.col("embedding").alias("c_emb"),
         _norm_expr(F.col("embedding")).alias("c_norm"),
@@ -355,9 +354,8 @@ def ivf_topk_frame(
     adaptive-vs-pinned recall on the clustered fixture); ``None`` =
     the adaptive ivf_nprobe rule the registered query ships."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     n = (
-        e.repartition(par, "vec_id")
+        spread(e, "vec_id")
         .select("vec_id", _scaled_expr(F.col("embedding")).alias("s"))
         .withColumn("nrm", F.sqrt(_sdot(F.col("s"), F.col("s"))))
     )
@@ -452,9 +450,8 @@ def ivf_recall_frame(
     ivf = ivf_topk_frame(spark, sf_dir, nprobe=nprobe).select(
         "query_id", "match_id"
     )
-    par = spark.sparkContext.defaultParallelism
     n = (
-        e.repartition(par, "vec_id")
+        spread(e, "vec_id")
         .select("vec_id", _scaled_expr(F.col("embedding")).alias("s"))
         .withColumn("nrm", F.sqrt(_sdot(F.col("s"), F.col("s"))))
     )
@@ -700,9 +697,8 @@ def simsearch_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
     comps = (
-        e.repartition(par, "vec_id")
+        spread(e, "vec_id")
         .select("label", F.posexplode("embedding").alias("dim0", "x"))
         .select(
             "label",
@@ -862,8 +858,7 @@ def _pq_subs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, sub): each embedding scaled to exact integers and cut
     into PQ_M subvectors (builtin slice — JVM-side, no Python)."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
-    se = e.repartition(par, "vec_id").select(
+    se = spread(e, "vec_id").select(
         "vec_id", _scaled_expr(F.col("embedding")).alias("s")
     )
     pieces = F.array(
@@ -1038,9 +1033,8 @@ def simsearch_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simsearch_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     n = (
-        e.repartition(par, "vec_id")
+        spread(e, "vec_id")
         .select("vec_id", _scaled_expr(F.col("embedding")).alias("s"))
         .withColumn("nrm", F.sqrt(_sdot(F.col("s"), F.col("s"))))
     )
@@ -1140,13 +1134,12 @@ KM_K = 8  # k-means clusters (deterministic init: vec_id < KM_K)
 )
 def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     # spread on vec_id BEFORE the per-row K x dim dot products: the
     # assign stage's groupBy(vec_id) needs this hash distribution
     # anyway (the exchange moves earlier, it is not added), and a
     # single-split input (one parquet row group) would otherwise run
     # every dot product in ONE task — 3.3x at sf1
-    n = e.repartition(par, "vec_id").select(
+    n = spread(e, "vec_id").select(
         "vec_id", _scaled_expr(F.col("embedding")).alias("s")
     )
 
@@ -1241,8 +1234,7 @@ def _exact_moments(spark: SparkSession, sf_dir: str):
     """(n_total, sums_x DF [i, sx], sums_xy DF [i, j, sxy]) — exact
     decimal combination of the per-batch partials."""
     e = load_table(spark, sf_dir, "embeddings")
-    par = e.sparkSession.sparkContext.defaultParallelism
-    p = _moment_partials(e.repartition(par, "vec_id"), DIM).cache()
+    p = _moment_partials(spread(e, "vec_id"), DIM).cache()
     sums_x = (
         p.select(F.posexplode("sx").alias("i", "v"))
         .groupBy("i")
@@ -1391,9 +1383,8 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     return (
-        e.repartitionByRange(par, "vec_id")
+        spread_range(e, "vec_id")
         .select("vec_id", "embedding")
         .mapInPandas(project, "vec_id long, proj array<double>")
         .sortWithinPartitions("vec_id")
@@ -1478,12 +1469,11 @@ def dedup_semdedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     # norms precomputed ONCE per row: the pair loop then runs a single
     # interpreted HOF (the dot product). Scaled-integer arithmetic
     # keeps the cosine exact and threshold-stable across engines.
     n = (
-        e.repartition(par, "vec_id")
+        spread(e, "vec_id")
         .select("vec_id", _scaled_expr(F.col("embedding")).alias("s"))
         .withColumn("nrm", F.sqrt(_sdot(F.col("s"), F.col("s"))))
     )

@@ -40,8 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _BLOCK = 512
 _MAGIC = b"ustar\x0000"  # POSIX magic "ustar\0" + version "00"

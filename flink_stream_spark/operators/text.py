@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread, spread_range
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 # tiny per-language function-word lists for the n-gram/stopword
 # language-ID heuristic (public common-word lists)
@@ -185,8 +185,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a partition-LOCAL sort after the fold yields the totally-ordered
     # result the determinism contract requires (FIXTURES.md) without a
     # second, global sort exchange of the folded rows
-    par = spark.sparkContext.defaultParallelism
-    d = d.repartitionByRange(par, "doc_id")
+    d = spread_range(d, "doc_id")
     tok_hashes = F.transform(F.split("text", " "), lambda t: _tok_hash_spark(t) % _MOD)
     fp = F.aggregate(
         tok_hashes,
@@ -267,8 +266,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").select(
+    toked = spread(d, "doc_id").select(
         "doc_id", F.split("text", " ").alias("ts")
     )
     n = F.size("ts")
@@ -390,8 +388,7 @@ def text_normalize_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    pre = d.repartition(par, "doc_id").select(
+    pre = spread(d, "doc_id").select(
         "doc_id",
         # explicit escape: the DECOMPOSED sequence a + U+0301; a raw
         # literal here would be one editor-renormalization away from

@@ -29,8 +29,8 @@ from pyspark.sql.window import Window as W
 
 from flink_stream_spark.catalog import load_table
 from flink_stream_spark.operators.exactmath import round6_ratio, round6_ratio_sql
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 
 @register(
@@ -62,9 +62,8 @@ from flink_stream_spark.operators.sortout import sorted_result
 )
 def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toks = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.explode_outer(F.split("text", " ")).alias("term"))
         .filter(F.col("term").isNotNull())
     )
@@ -123,8 +122,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    toked = d.repartition(par, "doc_id").withColumn("__toks", F.split("text", " "))
+    toked = spread(d, "doc_id").withColumn("__toks", F.split("text", " "))
     nt = F.size(F.col("__toks"))
     grams = F.when(
         nt >= 2,
@@ -179,9 +177,8 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_zipf_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toks = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select("source", F.explode_outer(F.split("text", " ")).alias("term"))
         .filter(F.col("term").isNotNull())
     )
@@ -254,9 +251,8 @@ def text_zipf_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toks = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.explode_outer(F.split("text", " ")).alias("term"))
         .filter(F.col("term").isNotNull())
     )
@@ -346,9 +342,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
     toks = (
-        d.repartition(par, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.explode_outer(F.split("text", " ")).alias("term"))
         .filter(F.col("term").isNotNull())
     )
@@ -485,14 +480,13 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dense list: cosine vs the vec_id-0 query embedding
     e = load_table(spark, sf_dir, "embeddings")
-    par = spark.sparkContext.defaultParallelism
     qv = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb"),
         _norm_expr(F.col("embedding")).alias("q_norm"),
     )
     cs = (
         e.filter(F.col("vec_id") != 0)
-        .repartition(par, "vec_id")
+        .transform(spread, "vec_id")
         .select(
             F.col("vec_id").alias("doc_id"),
             F.col("embedding").alias("c_emb"),
@@ -632,8 +626,7 @@ def text_bigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scoring branch and the counts branch both reuse (single-row-group parquet fixtures scan as
     # ONE task — without the exchange each consumer re-runs the scan
     # and explode serially).
-    par = spark.sparkContext.defaultParallelism
-    ts = d.repartition(par, "doc_id").select(
+    ts = spread(d, "doc_id").select(
         "doc_id", "source", F.split("text", " ").alias("ts")
     )
     seq = ts.select(

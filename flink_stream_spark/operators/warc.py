@@ -55,8 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 CRLF = b"\r\n"
 _WARC_VERSION = b"WARC/1.0"
@@ -381,7 +381,7 @@ def warc_scan(spark: SparkSession, warc_dir: str) -> DataFrame:
     idx = (
         spark.read.schema(_CDX_SCHEMA)
         .csv(os.path.join(warc_dir, "*.cdx.csv"))
-        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(spread)
     )
     return read_members(idx, warc_dir)
 

@@ -45,8 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _PAGES_PER_STREAM = 25
 
@@ -219,7 +219,7 @@ def scan_xml_dump(spark: SparkSession, dump_dir: str) -> DataFrame:
         .groupBy("stem", "offset")
         .count()
         .drop("count")
-        .repartition(spark.sparkContext.defaultParallelism)
+        .transform(spread)
     )
 
     def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

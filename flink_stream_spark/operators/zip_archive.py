@@ -51,8 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_stream_spark.catalog import load_table
+from flink_stream_spark.operators.layout import sorted_result, spread
 from flink_stream_spark.operators.registry import register
-from flink_stream_spark.operators.sortout import sorted_result
 
 _SIG_LOCAL = 0x04034B50
 _SIG_CENTRAL = 0x02014B50
@@ -298,7 +298,7 @@ def zip_scan(spark: SparkSession, zip_dir: str) -> DataFrame:
         _index,
         "path string, name string, method int, crc bigint, "
         "comp_size bigint, uncomp_size bigint, local_off bigint",
-    ).repartition(spark.sparkContext.defaultParallelism)
+    ).transform(spread)
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib

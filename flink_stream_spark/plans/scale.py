@@ -15,6 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
+
+from flink_stream_spark.operators.layout import spread_range
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -91,11 +94,57 @@ def salted_join(
     return joined.drop("__salt")
 
 
+def range_offsets(
+    df: DataFrame,
+    order_cols: list,
+    weight: str | None = None,
+    groups: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """The distributed prefix sum under a global running total.
+
+    Range-partitions ``df`` on ``groups`` then ``order_cols`` (the
+    partitioner a global sort uses, so each partition holds one
+    contiguous key range) and returns ``(parted, offsets)``:
+
+    - ``parted``: ``df`` plus ``__pid``, its range partition id;
+    - ``offsets``: broadcast rows (``__pid``, *groups, ``__off``), where
+      ``__off`` is the total ``weight`` (the row count when None) of
+      the preceding partitions of the same group.
+
+    A caller computes its running total within each partition of
+    ``parted`` (a window partitioned by ``__pid``, *groups), joins
+    ``offsets`` on ``["__pid", *groups]`` and adds ``__off``. The
+    ``offsets`` aggregate has one row per partition and group, and no
+    step funnels the data into one task.
+    """
+    # lazy localCheckpoint: the offsets branch and the caller's window
+    # branch both consume `parted`; without it, correctness depends on
+    # ReuseExchange deduplicating the two range exchanges — if it
+    # didn't (conf off, future planner change), each branch could
+    # sample DIFFERENT range boundaries and the totals would be wrong.
+    # The checkpoint pins one materialization both branches read.
+    parted = (
+        spread_range(df, *groups, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
+    )
+    total = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    sizes = parted.groupBy("__pid", *groups).agg(total.alias("__psum"))
+    w_off = W.partitionBy(*groups).orderBy("__pid").rowsBetween(
+        W.unboundedPreceding, -1
+    )
+    offsets = sizes.select(
+        "__pid",
+        *groups,
+        F.coalesce(F.sum("__psum").over(w_off), F.lit(0)).alias("__off"),
+    )
+    return parted, F.broadcast(offsets)
+
+
 def with_global_rank(
     df: DataFrame,
     order_cols: list,
     rank_col: str = "rank",
-    partitions: int | None = None,
 ) -> DataFrame:
     """Distributed GLOBAL dense row ranking over a total order.
 
@@ -104,8 +153,7 @@ def with_global_rank(
     Window') — the canonical 100 TB scale-killer for global ranking.
     This computes identical ranks scalably:
 
-    1. range-repartition on the order columns (the same partitioner a
-       global sort uses — each partition holds a contiguous key range);
+    1. range-repartition on the order columns (``range_offsets``);
     2. row_number WITHIN each partition (parallel windows);
     3. add each partition's cumulative row-count offset (a
        #partitions-row aggregate, broadcast back).
@@ -114,30 +162,11 @@ def with_global_rank(
     (ties must be broken by the order columns themselves). Partition
     boundary placement affects balance only, never the rank values.
     """
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    # lazy localCheckpoint: the size/offset branch and the window
-    # branch below both consume `parted`; without it, correctness
-    # depends on ReuseExchange deduplicating the two range exchanges —
-    # if it didn't (conf off, future planner change), each branch could
-    # sample DIFFERENT range boundaries and the ranks would be wrong.
-    # The checkpoint pins one materialization both branches read.
-    parted = (
-        df.repartitionByRange(n, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    from pyspark.sql.window import Window as _W
-
-    sizes = parted.groupBy("__pid").count()
-    w_off = _W.orderBy("__pid").rowsBetween(_W.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "__pid", F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("__off")
-    )
-    w_in = _W.partitionBy("__pid").orderBy(*order_cols)
+    parted, offsets = range_offsets(df, order_cols)
+    w_in = W.partitionBy("__pid").orderBy(*order_cols)
     return (
         parted.withColumn("__rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "__pid")
+        .join(offsets, "__pid")
         .withColumn(rank_col, (F.col("__rn") + F.col("__off")).cast("bigint"))
         .drop("__pid", "__rn", "__off")
     )

@@ -53,6 +53,7 @@ from flink_stream_spark.operators.html_extract import (
     MIN_CONTENT_CHARS,
     extract_main_text,
 )
+from flink_stream_spark.operators.layout import spread
 from flink_stream_spark.operators.warc import _CDX_SCHEMA, read_members
 from flink_stream_spark.streaming.near_dup import run_per_batch
 from flink_stream_spark.tables.managed import ManagedTable
@@ -101,9 +102,8 @@ def process_batch(
     hashes, per-record flags)."""
     spark = cdx_batch.sparkSession
     token = None if epoch_id is None else f"epoch:{epoch_id}"
-    par = spark.sparkContext.defaultParallelism
 
-    records = read_members(cdx_batch.repartition(par), warc_dir)
+    records = read_members(spread(cdx_batch), warc_dir)
     docs = extract_stage(records)
     hashes = docs.withColumn("h", F.md5("main_text")).localCheckpoint(
         eager=True

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-DEFAULT_NUM_BUCKETS = int(os.environ.get("SPARK_GRAFT_TABLE_BUCKETS", "16"))
+DEFAULT_NUM_BUCKETS = 16
 
 _BUCKET_COL = "__bucket"
 

@@ -8,6 +8,8 @@ aggregation, and no cartesian products anywhere.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from flink_stream_spark.operators import REGISTRY
@@ -315,19 +317,40 @@ _PYTHON_NODES = (
 )
 
 
+def _simple_plan(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+
+
 def _presort_inputs(df) -> list[str]:
     """The operator directly under each ``Exchange rangepartitioning``
     of ``df``'s physical plan (``explain("simple")``: an exchange is
     unary, so its child is the next line)."""
-    plan = df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    ops = [line.lstrip(" +-:") for line in plan.splitlines()]
+    ops = [line.lstrip(" +-:") for line in _simple_plan(df).splitlines()]
     return [
         ops[i + 1]
         for i, op in enumerate(ops[:-1])
         if op.startswith("Exchange rangepartitioning")
     ]
+
+
+# queries whose fixed-width exchange is sized from the data, not by
+# operators/layout.py: the triangle wedge join (graph._wedge_parallelism)
+# and the tar/zip readers' one task per shard
+_DATA_WIDTH = {
+    "graph_local_clustering_topk",
+    "graph_triangle_count",
+    "scan_tar_webdataset",
+    "scan_zip_roundtrip",
+}
+
+
+def _fixed_widths(plan: str) -> list[int]:
+    """The partition count of every ``REPARTITION_BY_NUM`` exchange
+    (a ``repartition``/``repartitionByRange`` given a count) in a plan
+    string: the last argument of its partitioning."""
+    return [int(w) for w in re.findall(r"(\d+)\), REPARTITION_BY_NUM", plan)]
 
 
 def test_registry_wide_plan_lint(spark, sf_oracle):
@@ -336,12 +359,15 @@ def test_registry_wide_plan_lint(spark, sf_oracle):
     broadcast silently becomes O(n²) at scale), no Python evaluation
     nodes outside the declared UDF-surface queries (a row-at-a-time
     UDF sneaking into a hot path is a 10-100× regression that no
-    result-correctness test would ever catch), and no user
-    repartition directly under a range sort: a pre-sort exchange goes
-    through ``sorted_result``, whose exchange the planner cannot
-    elide, never an inline ``repartition(...).orderBy(...)``."""
+    result-correctness test would ever catch), no user repartition
+    directly under a range sort: a pre-sort exchange goes through
+    ``sorted_result``, whose exchange the planner cannot elide, never
+    an inline ``repartition(...).orderBy(...)``, and no fixed-width
+    exchange whose width operators/layout.py did not decide (an
+    inline ``repartition(8, ...)``) outside ``_DATA_WIDTH``."""
     import __spark_entry__  # noqa: F401  (populates the registry)
 
+    width = spark.sparkContext.defaultParallelism
     bad = []
     for name, spec in sorted(REGISTRY.items()):
         df = spec.build(spark, sf_oracle)
@@ -357,6 +383,10 @@ def test_registry_wide_plan_lint(spark, sf_oracle):
         for op in _presort_inputs(df):
             if "REPARTITION_BY_COL" in op or "REPARTITION_BY_NUM" in op:
                 bad.append((name, "inline pre-sort repartition"))
+        if name not in _DATA_WIDTH:
+            for w in _fixed_widths(plan):
+                if w != width:
+                    bad.append((name, f"fixed width {w} != {width}"))
     assert not bad, f"plan lint violations: {bad}"
 
 
@@ -366,7 +396,7 @@ def test_sorted_result_keeps_exchange_over_partitioned_child(spark):
     ``repartition("k")`` there; ``sorted_result``'s exchange stays."""
     from pyspark.sql import functions as F
 
-    from flink_stream_spark.operators.sortout import sorted_result
+    from flink_stream_spark.operators.layout import sorted_result
 
     child = (
         spark.range(1000)
@@ -375,6 +405,43 @@ def test_sorted_result_keeps_exchange_over_partitioned_child(spark):
     )
     inputs = _presort_inputs(sorted_result(child, "k"))
     assert len(inputs) == 1 and inputs[0].startswith("Exchange "), inputs
+
+
+def test_layout_spreads_plan_the_session_width(spark):
+    """``spread`` plans a hash (or, without columns, round-robin)
+    ``REPARTITION_BY_NUM`` exchange and ``spread_range`` a range one,
+    each at the session's ``defaultParallelism``."""
+    from pyspark.sql import functions as F
+
+    from flink_stream_spark.operators.layout import spread, spread_range
+
+    w = spark.sparkContext.defaultParallelism
+    df = spark.range(100).withColumn("k", F.col("id") % 7)
+    hashed = _simple_plan(spread(df, "k"))
+    assert re.search(rf"Exchange hashpartitioning\(k#\d+L, {w}\), REPARTITION_BY_NUM", hashed), hashed
+    rr = _simple_plan(spread(df))
+    assert f"Exchange RoundRobinPartitioning({w}), REPARTITION_BY_NUM" in rr, rr
+    ranged = _simple_plan(spread_range(df, F.desc("k"), "id"))
+    assert re.search(
+        rf"Exchange rangepartitioning\(k#\d+L DESC NULLS LAST, id#\d+L ASC NULLS FIRST, {w}\), "
+        "REPARTITION_BY_NUM",
+        ranged,
+    ), ranged
+    assert _fixed_widths(hashed + rr + ranged) == [w, w, w]
+
+
+def test_spread_widens_single_split_scan(spark, sf_small):
+    """What the spread is for: the 1-split ``documents`` fixture scan
+    would run every downstream per-doc stage on one task; spread, it
+    runs on the session's width."""
+    from flink_stream_spark.catalog import load_table
+    from flink_stream_spark.operators.layout import spread
+
+    d = load_table(spark, sf_small, "documents")
+    assert d.rdd.getNumPartitions() == 1
+    spread_docs = spread(d, "doc_id")
+    assert spread_docs.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert spread_docs.count() == d.count()
 
 
 # every registered query whose output sort goes through sorted_result
